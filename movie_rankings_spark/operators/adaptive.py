@@ -15,27 +15,22 @@ fits, keep the shuffle join when it does not.
 Join RESULTS are identical either way — the hint changes the physical
 strategy, never the values — so oracle hashes are untouched.
 
-``MRS_BROADCAST_STATE_ROWS`` (default 5,000,000): a (long, double)
-state row frames to ~16 bytes + overhead, so 5M rows is ~100-200 MB
-built — inside normal executor budgets and far below Spark's 8 GB /
-512M-row broadcast cap. At 100 TB graph scale (billions of nodes) the
-count exceeds the bound and every operator keeps its co-partitioned
-shuffle join; the env knob lets a deployment raise/lower the trade.
+A (long, double) state row frames to ~16 bytes + overhead, so the
+5,000,000-row budget is ~100-200 MB built — inside normal executor
+budgets and far below Spark's 8 GB / 512M-row broadcast cap. At
+100 TB graph scale (billions of nodes) the count exceeds the budget
+and every operator keeps its co-partitioned shuffle join.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def broadcast_state_rows() -> int:
-    return int(os.environ.get("MRS_BROADCAST_STATE_ROWS", "5000000"))
+BROADCAST_STATE_ROWS = 5_000_000
 
 
 def state_hint(df: DataFrame, n_rows: int) -> DataFrame:
     """``F.broadcast(df)`` when the measured state row count fits the
     broadcast budget; ``df`` unchanged otherwise."""
-    return F.broadcast(df) if n_rows <= broadcast_state_rows() else df
+    return F.broadcast(df) if n_rows <= BROADCAST_STATE_ROWS else df

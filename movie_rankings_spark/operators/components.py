@@ -2,134 +2,25 @@
 that turns pairwise dedup output into dedup GROUPS (keep one
 representative per component, drop the rest).
 
-Algorithm: iterative min-label propagation. Every node starts labeled
-with itself; each round, a node adopts the minimum label in its
-closed neighborhood; converged when no label changes. Rounds needed =
-graph diameter, and near-dup graphs are overwhelmingly tiny cliques
-(diameter 1-2), so 2-4 rounds in practice.
+Algorithm: alternating small-star / large-star rounds (Kiveris et
+al., "Connected Components in MapReduce and Beyond"). Each round is
+two aggregate+join shuffles on node id over a shrinking edge list, no
+driver-side graph, and the rounds converge in O(log n) whatever the
+graph's DIAMETER: a 10⁶-node path finishes in ~20 rounds, where
+min-label propagation would need 10⁶. Every component is labeled by
+its minimum node id, which for string ids (the fuzzy-title alias
+graph) is the lexicographically smallest title.
 
-Scale shape per round: one groupBy over the (undirected) edge list +
-one join against the label table — both shuffles on node id, no
-driver-side graph. The label table is persisted per round and the
-previous round unpersisted, so peak storage is 2 × |nodes|. This is
-the DataFrame restatement of the map-reduce CC algorithms
-(small-star/large-star); for graphs with giant components swap in
-that alternation — the loop harness stays the same.
-
-Iterative = not SQL-expressible in one statement, so the registered
-query is a rows-only check; exactness is asserted against a
-union-find reference in tests/test_components.py.
+Iterative = not SQL-expressible in one statement; the registered
+queries are oracled by a DuckDB recursive-CTE transitive closure, and
+exactness is asserted against a union-find reference in
+tests/test_components.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """(node, component) for every node appearing in ``edges``;
-    component = min node id reachable from the node."""
-    both = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-
-    # closed neighborhood: every node is its own neighbor. The label
-    # table uses a distinct key name ("id") so per-round joins against
-    # adj (same lineage) are never ambiguous self-joins.
-    nodes = both.select(F.col("u")).distinct()
-    adj = both.union(nodes.select("u", F.col("u").alias("v"))).persist_tracked()
-
-    from movie_rankings_spark.operators.adaptive import state_hint
-
-    labels = nodes.select(
-        F.col("u").alias("id"), F.col("u").alias("label")
-    ).persist_tracked()
-    n_nodes = labels.count()
-
-    # r10 change detection (numeric node ids only): each round's label
-    # is min(neighbor labels ∪ self), so per-node labels are
-    # monotonically NON-INCREASING — "no label changed" is exactly
-    # "Σ label is unchanged". One decimal-exact aggregate on the new
-    # table replaces the old new⋈old join+filter+count (a full extra
-    # shuffle per round); the round count, and therefore the result,
-    # is identical. Non-numeric ids (the fuzzy-title CC) have no exact
-    # sum and keep the join-based check.
-    numeric_ids = isinstance(
-        labels.schema["label"].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    )
-
-    def _label_sum(df: DataFrame):
-        return df.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    prev_sum = _label_sum(labels) if numeric_ids else None
-    changed = 0
-    for _ in range(max_iterations):
-        # each node takes min(label of neighbors ∪ self); the label
-        # state is node-sized vs the edge-sized adj table — adaptive
-        # broadcast (operators/adaptive.py), identical values.
-        new_labels = (
-            adj.join(state_hint(labels, n_nodes), adj["v"] == labels["id"])
-            .select(F.col("u").alias("id"), "label")
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            .persist_tracked()
-        )
-        if numeric_ids:
-            new_sum = _label_sum(new_labels)
-            changed = 0 if new_sum == prev_sum else 1
-            prev_sum = new_sum
-        else:
-            changed = (
-                new_labels.withColumnRenamed("label", "new")
-                .join(labels, "id")
-                .filter(F.col("new") != F.col("label"))
-                .count()
-            )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    adj.unpersist()
-    if changed != 0:
-        # labels are still moving: the graph's diameter exceeds the
-        # round budget and the output would silently merge/split dedup
-        # groups — refuse rather than return wrong components.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations (labels still changing); raise "
-            "max_iterations (diameter > rounds) or switch to the "
-            "small-star/large-star alternation for giant components"
-        )
-    return labels.select(
-        F.col("id").alias("node"), F.col("label").alias("component")
-    )
-
-
-def dedup_components(pairs: DataFrame) -> DataFrame:
-    """Cluster near-dup pairs: one row per component with the kept
-    representative (min doc id) and the member count. Documents not in
-    any pair are implicitly their own singleton cluster and need no
-    row here — the dedup'd corpus is (all docs) minus (members that
-    are not representatives)."""
-    cc = connected_components(pairs)
-    return (
-        cc.groupBy("component")
-        .agg(
-            F.min("node").alias("rep_doc_id"),
-            F.count(F.lit(1)).alias("n_members"),
-        )
-        .select("rep_doc_id", "n_members")
-    )
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -143,7 +34,7 @@ def _canon(edges: DataFrame) -> DataFrame:
     )
 
 
-def _large_star(edges: DataFrame, n_nodes: int | None = None) -> DataFrame:
+def _large_star(edges: DataFrame, n_nodes: int) -> DataFrame:
     """Connect every strictly-larger neighbor of u to the minimum of
     u's closed neighborhood. No collect_list: the neighborhood min is
     an aggregate joined back per edge, so hubs cost a wide group,
@@ -156,8 +47,7 @@ def _large_star(edges: DataFrame, n_nodes: int | None = None) -> DataFrame:
     )
     mins = b.groupBy("u").agg(F.min("v").alias("mn"))
     mins = mins.select("u", F.least("mn", F.col("u")).alias("m"))
-    if n_nodes is not None:
-        mins = state_hint(mins, n_nodes)
+    mins = state_hint(mins, n_nodes)
     out = (
         b.join(mins, "u")
         .filter(F.col("v") > F.col("u"))
@@ -166,15 +56,14 @@ def _large_star(edges: DataFrame, n_nodes: int | None = None) -> DataFrame:
     return _canon(out)
 
 
-def _small_star(edges: DataFrame, n_nodes: int | None = None) -> DataFrame:
+def _small_star(edges: DataFrame, n_nodes: int) -> DataFrame:
     """Connect every smaller-or-equal neighbor of u (and u itself) to
     the minimum of u's smaller neighborhood."""
     from movie_rankings_spark.operators.adaptive import state_hint
 
     n = _canon(edges)
     mins = n.groupBy("u").agg(F.min("v").alias("mn"))
-    if n_nodes is not None:
-        mins = state_hint(mins, n_nodes)
+    mins = state_hint(mins, n_nodes)
     via_nbrs = n.join(mins, "u").select(
         F.col("v").alias("u"), F.col("mn").alias("v")
     )
@@ -182,18 +71,14 @@ def _small_star(edges: DataFrame, n_nodes: int | None = None) -> DataFrame:
     return _canon(via_nbrs.union(via_self))
 
 
-def connected_components_star(
+def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
     max_rounds: int = 30,
 ) -> DataFrame:
-    """(node, component) via alternating small-star / large-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond")
-    — the scale path next to the min-label propagation form above:
-    star rounds converge in O(log n) regardless of graph DIAMETER,
-    where label propagation needs diameter rounds (a 10⁶-node path
-    graph finishes in ~20 star rounds vs 10⁶ label rounds).
+    """(node, component) for every node appearing in ``edges``;
+    component = min node id reachable from the node.
 
     Each round is two aggregate+join shuffles over the (shrinking)
     edge list; lineage is cut per round with a ROTATING
@@ -242,7 +127,7 @@ def connected_components_star(
         sig = sig2
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not reach a fixed point in "
+            f"connected_components did not reach a fixed point in "
             f"{max_rounds} rounds; raise max_rounds"
         )
     labels = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
@@ -250,3 +135,20 @@ def connected_components_star(
         labels.select(F.col("node")), "node", "left_anti"
     ).select("node", F.col("node").alias("component"))
     return labels.union(roots)
+
+
+def dedup_components(pairs: DataFrame) -> DataFrame:
+    """Cluster near-dup pairs: one row per component with the kept
+    representative (min doc id) and the member count. Documents not in
+    any pair are implicitly their own singleton cluster and need no
+    row here — the dedup'd corpus is (all docs) minus (members that
+    are not representatives)."""
+    cc = connected_components(pairs)
+    return (
+        cc.groupBy("component")
+        .agg(
+            F.min("node").alias("rep_doc_id"),
+            F.count(F.lit(1)).alias("n_members"),
+        )
+        .select("rep_doc_id", "n_members")
+    )

@@ -5,8 +5,10 @@ Each power iteration is one co-partitioned equi-join (contributions =
 rank/out-degree shipped along edges) plus one partial-aggregated
 groupBy — the classic Pregel-style message pass expressed as
 DataFrame ops. No driver-side graph: edges and ranks live as
-DataFrames end-to-end, per-round persist/unpersist bounds lineage
-exactly like the CC loop. At 100 TB the per-round cost is one shuffle
+DataFrames end-to-end, and a rotating localCheckpoint per round
+bounds lineage. Global and personalized PageRank run the same loop
+(:func:`_power_iterate`) and differ only in their initial rank and
+update expression. At 100 TB the per-round cost is one shuffle
 of the edge table keyed by src (static — AQE reuses the layout) and
 one of the contribution table keyed by dst; rank state is
 O(|nodes|).
@@ -19,8 +21,12 @@ Window-over-()).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from movie_rankings_spark.session import session_conf
 
 
 def pagerank(
@@ -59,33 +65,58 @@ def pagerank(
     division is one deterministic rounding. The 5e-16 per-edge
     quantization is immaterial at rank scale; everything else is
     deterministic IEEE double arithmetic."""
-    spark = edges.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        return _pagerank(
-            edges, src, dst, damping, n_iterations, decimal_mass
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _pagerank(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    damping: float,
-    n_iterations: int,
-    decimal_mass: bool,
-) -> DataFrame:
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
+    with session_conf(edges.sparkSession, _shuffle_conf(shuffle_partitions)):
+        return _power_iterate(
+            e,
+            _node_ids(e),
+            lambda n: F.lit(1.0 / n),
+            lambda n, mass, dangling: (
+                F.lit((1.0 - damping) / n)
+                + F.lit(damping) * (mass + F.lit(dangling / n))
+            ),
+            n_iterations,
+            decimal_mass,
+        )
+
+
+def _node_ids(e: DataFrame) -> DataFrame:
+    return (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist_tracked()
     )
+
+
+def _shuffle_conf(shuffle_partitions: int | None) -> dict[str, str | None]:
+    return {
+        "spark.sql.shuffle.partitions": (
+            None if shuffle_partitions is None else str(shuffle_partitions)
+        )
+    }
+
+
+def _power_iterate(
+    e: DataFrame,
+    nodes: DataFrame,
+    init_rank: Callable[[int], Column],
+    update: Callable[[int, Column, float], Column],
+    n_iterations: int,
+    decimal_mass: bool,
+) -> DataFrame:
+    """The power-iteration loop :func:`pagerank` and
+    :func:`personalized_pagerank` share: (node, rank) after
+    ``n_iterations`` rounds over the (src, dst) edges ``e``.
+
+    ``nodes`` has one row per node, keyed ``node``, plus any columns
+    ``update`` reads. ``init_rank(n)`` is the starting rank and
+    ``update(n, mass, dangling)`` the next one, given the node count,
+    the mass that flowed in along edges this round and the mass held
+    by dangling nodes."""
+    from movie_rankings_spark.caching import rotating_checkpoint
+    from movie_rankings_spark.operators.adaptive import state_hint
+
+    nodes = nodes.persist_tracked()
     n = nodes.count()
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # edge table annotated with 1/deg once — static across rounds
@@ -97,11 +128,8 @@ def _pagerank(
     # graph without them (any symmetric graph) skips that round-trip
     has_dangling = n > e.select("src").distinct().count()
 
-    from movie_rankings_spark.caching import rotating_checkpoint
-    from movie_rankings_spark.operators.adaptive import state_hint
-
-    ckpt = rotating_checkpoint(edges.sparkSession)
-    ranks = ckpt(nodes.select("node", F.lit(1.0 / n).alias("rank")))
+    ckpt = rotating_checkpoint(e.sparkSession)
+    ranks = ckpt(nodes.select("node", init_rank(n).alias("rank")))
     for _ in range(n_iterations):
         # rotating localCheckpoint (not persist): it TRUNCATES the
         # logical plan (persist alone leaves each round's plan nested
@@ -137,24 +165,16 @@ def _pagerank(
             dangling = 1.0 - flowed
         else:
             dangling = 0.0  # all mass flows along edges, exactly
+        mass = F.coalesce(F.col("mass").cast("double"), F.lit(0.0)) / (
+            F.lit(1e15) if decimal_mass else F.lit(1.0)
+        )
         ranks = nodes.join(
             state_hint(contribs, n), nodes["node"] == contribs["dst"], "left"
-        ).select(
-            "node",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping)
-                * (
-                    F.coalesce(F.col("mass").cast("double"), F.lit(0.0))
-                    / (F.lit(1e15) if decimal_mass else F.lit(1.0))
-                    + F.lit(dangling / n)
-                )
-            ).alias("rank"),
-        )
+        ).select(*nodes.columns, update(n, mass, dangling).alias("rank"))
         ranks = ckpt(ranks)
     nodes.unpersist()
     weighted.unpersist()
-    return ranks
+    return ranks.select("node", "rank")
 
 
 def copurchase_edges(lineitem: DataFrame, max_basket: int = 30) -> DataFrame:
@@ -200,103 +220,40 @@ def personalized_pagerank(
     contribution sums, so the DuckDB twin hash-matches the full
     vector. Dangling mass is restarted onto the seeds (the standard
     PPR treatment); a symmetric graph has none."""
-    spark = edges.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        return _ppr(
-            edges, seeds, damping, n_iterations, decimal_mass, seed_col
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _ppr(
-    edges: DataFrame,
-    seeds: DataFrame,
-    damping: float,
-    n_iterations: int,
-    decimal_mass: bool,
-    seed_col: str,
-) -> DataFrame:
     e = edges.select(F.col("src"), F.col("dst"))
-    sd = seeds.select(F.col(seed_col).alias("node")).distinct().persist_tracked()
-    n_seeds = sd.count()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        # is_seed flag materialized once — the restart vector
-        .join(sd.withColumn("_s", F.lit(1)), "node", "left")
-        .select("node", F.coalesce(F.col("_s"), F.lit(0)).alias("is_seed"))
-        .persist_tracked()
-    )
-    n = nodes.count()
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    weighted = e.join(out_deg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
-    ).persist_tracked()
-    weighted.count()
-    has_dangling = n > e.select("src").distinct().count()
-    base = (1.0 - damping) / n_seeds
-    restart = F.col("is_seed").cast("double") * F.lit(base)
-    from movie_rankings_spark.caching import rotating_checkpoint
-    from movie_rankings_spark.operators.adaptive import state_hint
-
-    ckpt = rotating_checkpoint(edges.sparkSession)
-    ranks = ckpt(nodes.select(
-        "node",
-        (F.col("is_seed").cast("double") / F.lit(float(n_seeds))).alias("rank"),
-    ))
-    for _ in range(n_iterations):
-        c = F.col("rank") * F.col("w")
-        if decimal_mass:
-            c = F.round(c * F.lit(1e15)).cast("long")
-        # r10: same adaptive state broadcast as _pagerank — node-sized
-        # state vs edge-sized static side, values unchanged.
-        contribs = (
-            weighted.join(state_hint(ranks, n), weighted["src"] == ranks["node"])
-            .select("dst", c.alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("mass"))
+    with session_conf(edges.sparkSession, _shuffle_conf(shuffle_partitions)):
+        sd = (
+            seeds.select(F.col(seed_col).alias("node"))
+            .distinct()
+            .persist_tracked()
         )
-        if has_dangling:
-            contribs = ckpt(contribs)
-            total = contribs.agg(F.sum("mass")).collect()[0][0]
-            flowed = (
-                float(total or 0) / 1e15
-                if decimal_mass
-                else float(total or 0.0)
-            )
-            dangling = 1.0 - flowed
-        else:
-            dangling = 0.0
-        ranks = nodes.join(
-            state_hint(contribs, n), nodes["node"] == contribs["dst"], "left"
-        ).select(
-            "node",
-            "is_seed",
-            (
+        n_seeds = sd.count()
+        nodes = (
+            _node_ids(e)
+            # is_seed flag materialized once — the restart vector
+            .join(sd.withColumn("_s", F.lit(1)), "node", "left")
+            .select("node", F.coalesce(F.col("_s"), F.lit(0)).alias("is_seed"))
+        )
+        is_seed = F.col("is_seed").cast("double")
+        restart = is_seed * F.lit((1.0 - damping) / n_seeds)
+        ranks = _power_iterate(
+            e,
+            nodes,
+            lambda n: is_seed / F.lit(float(n_seeds)),
+            lambda n, mass, dangling: (
                 restart
-                + F.lit(damping)
-                * (
-                    F.coalesce(F.col("mass").cast("double"), F.lit(0.0))
-                    / (F.lit(1e15) if decimal_mass else F.lit(1.0))
-                )
+                + F.lit(damping) * mass
                 # dangling mass restarts onto the seeds
-                + F.col("is_seed").cast("double")
+                + is_seed
                 * F.lit(damping)
                 * F.lit(dangling)
                 / F.lit(float(n_seeds))
-            ).alias("rank"),
+            ),
+            n_iterations,
+            decimal_mass,
         )
-        ranks = ckpt(ranks)
-    out = ranks.select("node", "rank")
-    nodes.unpersist()
-    weighted.unpersist()
-    sd.unpersist()
-    return out
+        sd.unpersist()
+        return ranks
 
 
 def hits_bipartite(

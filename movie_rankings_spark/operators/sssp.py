@@ -47,10 +47,27 @@ def bfs_distances(
     seed; unreached nodes are absent. ``seeds`` is a 1-column frame of
     seed node ids (dist 0). Edges directed; pass both directions for
     an undirected graph (copurchase_edges already is)."""
+    return _bfs(edges, seeds, n_rounds, src, dst, seed_col)
+
+
+def _bfs(
+    edges: DataFrame,
+    seeds: DataFrame,
+    n_rounds: int,
+    src: str,
+    dst: str,
+    seed_col: str,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """The frontier relaxation loop :func:`bfs_distances` and
+    :func:`harmonic_centrality` share: (*keys, node, dist) with the
+    minimum hop count per (*keys, node). Every state column starts as
+    the seed id, so ``keys=("seed",)`` runs one BFS per seed."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist_tracked()
     e.count()  # materialize: every round's frontier join reads it
     dist = seeds.select(
-        F.col(seed_col).alias("node"), F.lit(0).cast("int").alias("dist")
+        *[F.col(seed_col).alias(k) for k in (*keys, "node")],
+        F.lit(0).cast("int").alias("dist"),
     ).localCheckpoint()
     from movie_rankings_spark.operators.adaptive import state_hint
 
@@ -71,12 +88,13 @@ def bfs_distances(
         cand = state_hint(frontier, n_frontier).join(
             e, frontier["node"] == e["src"]
         ).select(
+            *keys,
             F.col("dst").alias("node"),
             (F.col("dist") + 1).alias("dist"),
         )
         dist = (
             dist.unionByName(cand)
-            .groupBy("node")
+            .groupBy(*keys, "node")
             .agg(F.min("dist").alias("dist"))
             .localCheckpoint()
         )
@@ -164,39 +182,7 @@ def harmonic_centrality(
     """
     if n_rounds > 6:
         raise ValueError("n_rounds > 6 breaks the exact 60/d sum")
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).persist_tracked()
-    e.count()  # materialize: every round's frontier join reads it
-    dist = seeds.select(
-        F.col(seed_col).alias("seed"),
-        F.col(seed_col).alias("node"),
-        F.lit(0).cast("int").alias("dist"),
-    ).localCheckpoint()
-    from movie_rankings_spark.operators.adaptive import state_hint
-
-    frontier = dist
-    for r in range(1, n_rounds + 1):
-        # r10: exact count probe + adaptive frontier broadcast, as in
-        # bfs_distances — identical values, no edge shuffle per round
-        n_frontier = frontier.count()
-        if n_frontier == 0:
-            break
-        cand = state_hint(frontier, n_frontier).join(
-            e, frontier["node"] == e["src"]
-        ).select(
-            "seed",
-            F.col("dst").alias("node"),
-            (F.col("dist") + 1).alias("dist"),
-        )
-        dist = (
-            dist.unionByName(cand)
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        frontier = dist.filter(F.col("dist") == r)
-    e.unpersist()
+    dist = _bfs(edges, seeds, n_rounds, src, dst, seed_col, keys=("seed",))
     reached = dist.filter(F.col("dist") >= 1)
     hc_num = F.sum(
         (F.lit(60) / F.col("dist")).cast("long")

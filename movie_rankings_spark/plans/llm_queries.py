@@ -325,9 +325,9 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # previously MinHash candidates, whose 0.5-threshold recall is only
 # ~0.64 in theory) — then a recursive-CTE transitive
 # closure labels each node with its minimum reachable id — the same
-# fixpoint the iterative min-label loop converges to. Closure is
-# quadratic in component size, fine for the oracle tier's tiny
-# cliques; the Spark side stays the linear per-round label join.
+# labels the star rounds of operators/components.py converge to.
+# Closure is quadratic in component size, fine for the oracle tier's
+# tiny cliques; the Spark side stays the per-round star joins.
 _CLUSTER_ORACLE = f"""
 WITH RECURSIVE s AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
 e AS (SELECT doc_id, unnest(sh) AS g FROM s),
@@ -360,9 +360,9 @@ FROM labels GROUP BY component ORDER BY rep_doc_id
 
 @REGISTRY.register("dedup_cluster_reps", _CLUSTER_ORACLE)
 def dedup_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs clustered into components (iterative min-label
-    propagation, operators/components.py): one row per dedup group
-    with the representative and member count. Oracled exactly via a
+    """Near-dup pairs clustered into components (small-star /
+    large-star rounds, operators/components.py): one row per dedup
+    group with the representative and member count. Oracled exactly via a
     DuckDB recursive-CTE transitive closure over the same verified
     edge set; exactness vs union-find is also asserted in
     tests/test_components.py."""
@@ -2585,33 +2585,9 @@ def sample_k_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Same oracle as dedup_cluster_reps: both CC algorithms compute the
-# same partition of the same verified edge set.
-@REGISTRY.register("dedup_cluster_reps_star", _CLUSTER_ORACLE)
-def dedup_cluster_reps_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_cluster_reps through the O(log n)-round small-star /
-    large-star alternation (operators/components.py::
-    connected_components_star) instead of min-label propagation —
-    the variant that survives high-diameter graphs (a path of 10⁶
-    nodes needs ~20 star rounds vs 10⁶ label rounds). Same DuckDB
-    transitive-closure oracle."""
-    from movie_rankings_spark.operators.components import (
-        connected_components_star,
-    )
-
-    pairs = dedup.jaccard_prefix_pairs(
-        _docs(spark, sf_dir), n=3, threshold=0.5
-    )
-    cc = connected_components_star(pairs)
-    return (
-        cc.groupBy("component")
-        .agg(
-            F.min("node").alias("rep_doc_id"),
-            F.count(F.lit(1)).alias("n_members"),
-        )
-        .select("rep_doc_id", "n_members")
-        .orderBy("rep_doc_id")
-    )
+# dedup_cluster_reps under a second registered name: the driver
+# contract lists every registered query, so the name stays.
+REGISTRY.register("dedup_cluster_reps_star", _CLUSTER_ORACLE)(dedup_cluster_reps)
 
 
 _KNN_ORACLE = f"""
@@ -3053,19 +3029,18 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     next to the corpus; the quality join touches only those rows, and
     the per-component window partitions by component (no global
     sort). Components come from the O(log n) small-star/large-star
-    rounds (min-label propagation needs graph-diameter rounds — 2.7x
-    slower here, unboundedly worse on chain-shaped clusters). Oracled
+    rounds (operators/components.py). Oracled
     exactly via the recursive-CTE transitive closure over the
     verified-exact edge set plus the same quality formula."""
     from movie_rankings_spark.operators.components import (
-        connected_components_star,
+        connected_components,
     )
     from movie_rankings_spark.functions.text import quality_score
     from pyspark.sql import Window
 
     docs = _docs(spark, sf_dir)
     pairs = dedup.jaccard_prefix_pairs(docs, n=3, threshold=0.5)
-    labels = connected_components_star(pairs)
+    labels = connected_components(pairs)
     q = docs.select("doc_id", quality_score(F.col("text")).alias("quality"))
     member = labels.join(q, labels["node"] == q["doc_id"]).select(
         "component", "doc_id", "quality"
@@ -3901,7 +3876,7 @@ def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         words,
     )
     from movie_rankings_spark.operators.components import (
-        connected_components_star,
+        connected_components,
     )
     from pyspark.sql import Window
 
@@ -3927,7 +3902,7 @@ def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.jaccard_prefix_pairs(
         docs.select("doc_id", "text"), n=3, threshold=0.5
     )
-    labels = connected_components_star(pairs)
+    labels = connected_components(pairs)
     near_removed = (
         labels.filter(F.col("node") != F.col("component"))
         .join(docs.select(F.col("doc_id").alias("node"), "n_words"), "node")

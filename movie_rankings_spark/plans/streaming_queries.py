@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from movie_rankings_spark.plans.registry import REGISTRY
 from movie_rankings_spark.scratch import scratch_dir
+from movie_rankings_spark.session import session_conf
 from movie_rankings_spark.streaming import events as ev
 
 _TUMBLING_ORACLE = """
@@ -390,21 +391,13 @@ def stream_tws_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_rankings_spark.streaming.stateful import sessionize_tws
 
     src = _stage_time_split_events(spark, sf_dir, n=3)
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(prov_key, _ROCKSDB_PROVIDER)
-    try:
+    with session_conf(spark, _ROCKSDB_STATE):
         stream = ev.read_events_stream(spark, src, maxFilesPerTrigger=1)
         out = ev.run_to_batch(
             sessionize_tws(stream),
             output_mode="append",
             state_partitions=None,  # Python-state op: keep parallelism
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
     return out.orderBy("user_id", "session_seq")
 
 
@@ -457,9 +450,12 @@ SELECT user_id,
 FROM events GROUP BY user_id ORDER BY user_id
 """
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
+_ROCKSDB_STATE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    )
+}
 
 
 @REGISTRY.register("stream_transform_with_state", _TWS_LIFETIME_ORACLE)
@@ -487,21 +483,13 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_rankings_spark.streaming.stateful import user_lifetime_tws
 
     src = _stage_split_events(spark, sf_dir, n=2)
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(prov_key, _ROCKSDB_PROVIDER)
-    try:
+    with session_conf(spark, _ROCKSDB_STATE):
         stream = ev.read_events_stream(spark, src, maxFilesPerTrigger=1)
         out = ev.run_to_batch(
             user_lifetime_tws(stream),
             output_mode="update",
             state_partitions=None,  # Python-state op: keep parallelism
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         out.withColumn("_rn", F.row_number().over(w))
@@ -547,21 +535,13 @@ def stream_tws_lastk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_rankings_spark.streaming.stateful import user_lastk_tws
 
     src = _stage_split_events(spark, sf_dir, n=2)
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(prov_key, _ROCKSDB_PROVIDER)
-    try:
+    with session_conf(spark, _ROCKSDB_STATE):
         stream = ev.read_events_stream(spark, src, maxFilesPerTrigger=1)
         out = ev.run_to_batch(
             user_lastk_tws(stream),
             output_mode="update",
             state_partitions=None,  # Python-state op: keep parallelism
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
     w = Window.partitionBy("user_id").orderBy(F.col("n_seen").desc())
     return (
         out.withColumn("_rn", F.row_number().over(w))

@@ -16,6 +16,7 @@ from movie_rankings_spark.operators.attribution import last_touch_attribution
 from movie_rankings_spark.operators.layout import morton_sql, zorder_bucket_stats
 from movie_rankings_spark.operators.scd2 import scd2_history
 from movie_rankings_spark.plans.registry import REGISTRY
+from movie_rankings_spark.session import session_conf
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -547,26 +548,15 @@ def bloom_semijoin_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver, check_oracle, bench), which run queries strictly
     serially; a concurrent caller should hand this query its own
     ``spark.newSession()``."""
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "100MB",
-        )
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            "0",
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    bloom = "spark.sql.optimizer.runtime.bloomFilter."
+    with session_conf(
+        spark,
+        {
+            bloom + "creationSideThreshold": "100MB",
+            bloom + "applicationSideScanSizeThreshold": "0",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    ):
         # plan-contract query: InjectRuntimeFilter only fires when the
         # application side is a bare scan, so read the tables directly
         # — the r10 small-scan fan-out exchange (catalog.py) would sit
@@ -590,12 +580,6 @@ def bloom_semijoin_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         has_bloom = "might_contain" in plan and "bloom_filter_agg" in plan
         audit = joined.collect()[0]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [
             (

@@ -9,6 +9,8 @@ timezone so timestamp semantics match the DuckDB oracle.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -57,3 +59,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def session_conf(
+    spark: SparkSession, conf: dict[str, str | None]
+) -> Iterator[None]:
+    """Scope session confs to a block: set every key whose value is not
+    None, and on exit — error or not — put each back as it was, unsetting
+    the keys that had no value before."""
+    keys = [k for k, v in conf.items() if v is not None]
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, conf[k])
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_rankings_spark.catalog import table_path
+from movie_rankings_spark.session import session_conf
 
 EVENTS_RAW_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
@@ -313,21 +314,19 @@ def run_to_batch(
     name = name or f"stream_{uuid.uuid4().hex[:12]}"
     ckpt = os.path.join(_CHECKPOINT_ROOT, name)
     os.makedirs(_CHECKPOINT_ROOT, exist_ok=True)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    partitions = None if state_partitions is None else str(state_partitions)
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with session_conf(spark, {"spark.sql.shuffle.partitions": partitions}):
+            q = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         # the checkpoint is single-use by construction (fresh name,
         # availableNow run to completion, memory sink holds the rows):
         # keeping it would only accumulate — ~1 GB over a few hundred

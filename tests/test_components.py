@@ -42,14 +42,14 @@ def test_components_match_union_find_on_chain_and_cliques(spark):
 
 
 def test_components_raise_on_nonconvergence(spark):
-    # an 8-chain needs ~7 min-label rounds; a 2-round budget must
+    # a 200-node path is not a star after 2 rounds; the budget must
     # refuse loudly instead of returning half-merged groups
     import pytest
 
-    edges = [(i, i + 1) for i in range(1, 8)]
+    edges = [(i, i + 1) for i in range(199)]
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iterations=2)
+    with pytest.raises(RuntimeError, match="did not reach a fixed point"):
+        connected_components(df, max_rounds=2)
 
 
 def test_dedup_components_on_real_pairs(spark, sf_dir):
@@ -72,47 +72,24 @@ class TestStarComponents:
     def _labels(self, df):
         return {r["node"]: r["component"] for r in df.collect()}
 
-    def test_matches_min_label_on_neardup_graph(self, spark, sf_dir):
-        from movie_rankings_spark.catalog import load_table
-        from movie_rankings_spark.operators import dedup
-        from movie_rankings_spark.operators.components import (
-            connected_components,
-            connected_components_star,
-        )
-
-        pairs = dedup.ngram_jaccard_pairs(
-            load_table(spark, sf_dir, "documents"), n=3, threshold=0.5
-        )
-        a = self._labels(connected_components(pairs))
-        b = self._labels(connected_components_star(pairs))
-        assert a == b and len(a) > 0
-
     def test_long_path_converges_in_log_rounds(self, spark):
         """A 200-node path has diameter 199 — min-label propagation
-        would need 199 rounds (its default 20-round budget refuses);
-        the star form must finish well within 30 rounds."""
-        from movie_rankings_spark.operators.components import (
-            connected_components_star,
-        )
-
+        would need 199 rounds; the star rounds must finish well within
+        the default 30."""
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(199)], "doc_a long, doc_b long"
         )
-        labels = self._labels(connected_components_star(edges))
+        labels = self._labels(connected_components(edges))
         assert set(labels.values()) == {0} and len(labels) == 200
 
     def test_random_graph_matches_union_find(self, spark):
         import random
 
-        from movie_rankings_spark.operators.components import (
-            connected_components_star,
-        )
-
         rng = random.Random(5)
         edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
         edges = [(a, b) for a, b in edges if a != b]
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = self._labels(connected_components_star(df))
+        got = self._labels(connected_components(df))
         parent = list(range(60))
 
         def find(x):

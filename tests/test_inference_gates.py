@@ -169,6 +169,36 @@ def test_harmonic_centrality_path_graph(spark):
     assert rows[3]["hc_num"] == 180
 
 
+def test_harmonic_reach_matches_bfs_per_seed(spark):
+    # both run the same frontier loop; harmonic only carries the seed
+    # in the group key, so its per-seed reach must equal a one-seed BFS
+    from movie_rankings_spark.operators.sssp import (
+        bfs_distances,
+        harmonic_centrality,
+    )
+
+    und = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (2, 7), (7, 8), (9, 10)]
+    edges = spark.createDataFrame(
+        und + [(b, a) for a, b in und], "src long, dst long"
+    )
+    seed_ids = [1, 4, 9]
+    seeds = spark.createDataFrame([(s,) for s in seed_ids], "node long")
+    got = {
+        r["seed"]: r["n_reached"]
+        for r in harmonic_centrality(edges, seeds, n_rounds=3).collect()
+    }
+    want = {}
+    for s in seed_ids:
+        one = spark.createDataFrame([(s,)], "node long")
+        want[s] = (
+            bfs_distances(edges, one, n_rounds=3)
+            .filter("dist >= 1")
+            .count()
+        )
+    assert got == want
+    assert want == {1: 5, 4: 6, 9: 1}
+
+
 def test_harmonic_centrality_rejects_unexact_radius(spark):
     import pytest
 

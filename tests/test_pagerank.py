@@ -12,7 +12,11 @@ import numpy as np
 
 from pyspark.sql import functions as F
 
-from movie_rankings_spark.operators.pagerank import copurchase_edges, pagerank
+from movie_rankings_spark.operators.pagerank import (
+    copurchase_edges,
+    pagerank,
+    personalized_pagerank,
+)
 
 
 def _numpy_pagerank(edges, n_nodes, damping=0.85, iters=10):
@@ -60,6 +64,22 @@ class TestPagerank:
         got, _ = _run(spark, edges, 5)
         assert got[0] > max(got[i] for i in range(1, 5)) * 2
         assert abs(sum(got.values()) - 1.0) < 1e-9
+
+    def test_equals_ppr_seeded_with_every_node(self, spark):
+        # no dangling nodes: restarting onto every node IS the uniform
+        # teleport, so both public functions must give the same ranks
+        # out of the loop they share
+        edges = [(0, 1), (1, 2), (2, 0), (0, 2), (2, 3), (3, 1)]
+        df = spark.createDataFrame(edges, "src long, dst long")
+        seeds = spark.createDataFrame([(i,) for i in range(4)], "node long")
+        got = {r["node"]: r["rank"] for r in pagerank(df).collect()}
+        ppr = {
+            r["node"]: r["rank"]
+            for r in personalized_pagerank(df, seeds).collect()
+        }
+        assert got.keys() == ppr.keys() == set(range(4))
+        for node, rank in got.items():
+            assert abs(rank - ppr[node]) < 1e-12, (node, rank, ppr[node])
 
     def test_copurchase_edges_symmetric_and_bounded(self, spark):
         li = spark.createDataFrame(

@@ -291,6 +291,37 @@ def test_stream_bitmaps_equal_batch_and_or_is_idempotent(spark, sf_dir):
     assert again == batch
 
 
+def test_session_conf_restores_unsets_and_skips_none(spark):
+    """session_conf (the scope run_to_batch and the RocksDB stream
+    queries set their confs with) leaves the session as it found it."""
+    import pytest
+
+    from movie_rankings_spark.session import session_conf
+
+    set_key = "spark.sql.shuffle.partitions"
+    absent = "spark.mrs.test.absent"
+    skipped = "spark.mrs.test.skipped"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(absent, None) is None
+    try:
+        with session_conf(spark, {set_key: "3", absent: "x", skipped: None}):
+            assert spark.conf.get(set_key) == "3"
+            assert spark.conf.get(absent) == "x"
+            assert spark.conf.get(skipped, None) is None  # not set
+            spark.conf.set(skipped, "inner")
+        assert spark.conf.get(set_key) == before
+        assert spark.conf.get(absent, None) is None
+        assert spark.conf.get(skipped) == "inner"  # nor restored
+    finally:
+        spark.conf.unset(skipped)
+
+    with pytest.raises(ZeroDivisionError):
+        with session_conf(spark, {set_key: "5", absent: "y"}):
+            1 / 0
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(absent, None) is None
+
+
 def test_rocksdb_state_store_provider_equals_batch(spark, sf_dir):
     """The RocksDB state-store provider — the backend whose state
     capacity is disk-bounded, i.e. the 100 TB configuration — must

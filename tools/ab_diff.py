@@ -25,15 +25,21 @@ def main() -> int:
     for d, av, bv, q in rows:
         if abs(d) < min_d:
             continue
-        print(f"{q:40s} {av:8.3f} {bv:8.3f} {d:+8.3f} {bv / av:6.2f}")
+        ratio = f"{bv / av:6.2f}" if av > 0 else f"{'-':>6s}"
+        print(f"{q:40s} {av:8.3f} {bv:8.3f} {d:+8.3f} {ratio}")
     ta, tb = sum(a[q] for q in common), sum(b[q] for q in common)
-    geo = math.exp(
-        sum(math.log(b[q] / a[q]) for q in common if a[q] > 0 and b[q] > 0)
-        / len(common)
+    # a non-positive time has no log: the geomean is over the valid
+    # pairs only, and says so via n_valid
+    valid = [q for q in common if a[q] > 0 and b[q] > 0]
+    geo = (
+        math.exp(sum(math.log(b[q] / a[q]) for q in valid) / len(valid))
+        if valid
+        else float("nan")
     )
     print(
         f"\ntotal A={ta:.1f}s B={tb:.1f}s (A-B {ta - tb:+.1f}s); "
-        f"geomean B/A speedup={geo:.3f}; n={len(common)}"
+        f"geomean B/A speedup={geo:.3f}; n={len(common)} "
+        f"n_valid={len(valid)}"
     )
     return 0
 

@@ -53,11 +53,11 @@ _FANOUT_KEY = {
 }
 
 
-#: memoized scan-partition probes: (path, size, target) -> n_parts.
+#: memoized scan-partition probes: (path, size, mtime_ns, target) -> n_parts.
 #: A plan-shape fact, not data — probing costs a full analyze/plan
 #: cycle (df.rdd), which the r10 blanket fan-out paid on EVERY
 #: load_table call of every query.
-_SCAN_PARTS_CACHE: dict[tuple[str, int, int], int] = {}
+_SCAN_PARTS_CACHE: dict[tuple[str, int, int, int], int] = {}
 
 
 def _fanout_small_scan(df: DataFrame, path: str, key: str | None) -> DataFrame:
@@ -92,13 +92,14 @@ def _fanout_small_scan(df: DataFrame, path: str, key: str | None) -> DataFrame:
     MRS_SCAN_FANOUT=0 disables every fan-out, =all restores the r10
     blanket behaviour (both are A/B knobs)."""
     try:
-        size = os.path.getsize(path)
-        if size < _FANOUT_MIN_BYTES:
-            return df
+        st = os.stat(path)
     except OSError:
         return df
+    if st.st_size < _FANOUT_MIN_BYTES:
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    memo_key = (path, size, target)
+    # mtime: a file rewritten at the same size must be probed again
+    memo_key = (path, st.st_size, st.st_mtime_ns, target)
     n_parts = _SCAN_PARTS_CACHE.get(memo_key)
     if n_parts is None:
         n_parts = df.rdd.getNumPartitions()

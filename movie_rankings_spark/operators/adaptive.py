@@ -1,11 +1,13 @@
 """Scale-adaptive physical hints shared by the iterative operators.
 
-The Pregel-style loops (pagerank, components, k-core, sssp, LPA,
-HITS...) join a NODE-SIZED state table against an EDGE-SIZED static
-table every round. Left to the planner, the state side's size is
-unknown after a localCheckpoint (LogicalRDD has no stats), so every
-round pays a shuffle+sort of the edge table to sort-merge-join a state
-table that is orders of magnitude smaller. Each operator already
+The Pregel-style loops (pagerank, components, k-core, LPA, HITS...)
+join a NODE-SIZED state table against an EDGE-SIZED static table
+every round. (The bounded-round BFS in sssp.py needs no hint: it
+never checkpoints, so AQE sees real sizes and picks the join itself.)
+Left to the planner, the state side's size is unknown after a
+localCheckpoint (LogicalRDD has no stats), so every round pays a
+shuffle+sort of the edge table to sort-merge-join a state table that
+is orders of magnitude smaller. Each operator already
 counts its nodes up front; this helper turns that measured size into
 the deliberate join-strategy pick of the optimization guide (§3.1
 "broadcast the side that fits", §2.4 "a broadcast join replaces a

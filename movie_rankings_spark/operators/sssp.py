@@ -9,24 +9,30 @@ related-records walk.
 
 Each relaxation round, as DataFrame ops:
 
-- candidates: the current FRONTIER (nodes whose distance improved last
-  round) equi-joined to the edge list ships dist+1 to each neighbour;
-- relax: union with the current state, one map-side-combined
-  groupBy-min per node.
+- candidates: the state left-joined to the edge list on
+  ``node = src AND dist = r - 1`` — only the FRONTIER (nodes first
+  reached last round) matches, and ships dist+1 to each neighbour;
+- relax: each joined row yields itself and its candidate, then one
+  map-side-combined groupBy-min per node.
 
-Joining only the frontier (not the full distance table) is the
-standard delta optimization: total join work across ALL rounds is
-O(Σ frontier sizes) = O(|edges|) for BFS, not rounds × |edges|. The
-frontier shrinks to empty at convergence; a fixed round bound is the
+Matching only the frontier is the standard delta optimization: total
+edge-join work across ALL rounds is O(Σ frontier out-degrees) =
+O(|edges|) for BFS, not rounds × |edges|. A fixed round bound is the
 query contract (the LPA/k-core convention) and ``n_rounds`` ≥ graph
 diameter reaches the fixed point — pinned via :func:`converged` in
 tests.
 
+The bounded-round loop is ONE lazy plan: no per-round count, persist
+or checkpoint, so building it runs no Spark job. With no
+``LogicalRDD`` leaves AQE sees real sizes and picks broadcast or
+shuffle joins itself, and exchange reuse computes the edge side once.
+
 Determinism: distances are pure integers (hop counts), min is
 order-independent — the unrolled DuckDB twin hash-matches. At 100 TB:
-state is O(|nodes|), per-round cost one frontier-sized equi-join +
-one aggregate; lineage truncated per round (localCheckpoint →
-reliable checkpoint at cluster scale).
+state is O(|nodes|), per-round cost one pass of the state through the
+edge join + one aggregate. In a shuffle join the non-frontier rows
+share the null join key, so they land in one partition; AQE's skew
+join splits that partition (left-outer streams the left side).
 """
 
 from __future__ import annotations
@@ -59,47 +65,34 @@ def _bfs(
     seed_col: str,
     keys: tuple[str, ...] = (),
 ) -> DataFrame:
-    """The frontier relaxation loop :func:`bfs_distances` and
+    """The relaxation :func:`bfs_distances` and
     :func:`harmonic_centrality` share: (*keys, node, dist) with the
     minimum hop count per (*keys, node). Every state column starts as
-    the seed id, so ``keys=("seed",)`` runs one BFS per seed."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist_tracked()
-    e.count()  # materialize: every round's frontier join reads it
+    the seed id, so ``keys=("seed",)`` runs one BFS per seed.
+
+    Each round reads the previous state exactly once, so the lazy plan
+    grows linearly with ``n_rounds``; ``state ∪ (frontier ⋈ edges)``
+    would read it twice and double the plan every round."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     dist = seeds.select(
         *[F.col(seed_col).alias(k) for k in (*keys, "node")],
         F.lit(0).cast("int").alias("dist"),
-    ).localCheckpoint()
-    from movie_rankings_spark.operators.adaptive import state_hint
-
-    frontier = dist
+    )
     for r in range(1, n_rounds + 1):
-        # r10: the emptiness probe becomes an exact count — same
-        # one action per round, and the measured size now drives the
-        # adaptive broadcast of the (node-sized, usually much smaller)
-        # frontier into the edge join (operators/adaptive.py).
-        n_frontier = frontier.count()
-        if n_frontier == 0:
-            break  # converged: nothing was discovered last round
         # BFS invariant: a node's final distance IS the round it first
-        # appears, so the frontier is simply `dist == r` on the new
-        # state — the delta optimization WITHOUT a cand-vs-dist
-        # self-join (which Spark's checkpoint attribute mapping
-        # handles poorly on shared lineage)
-        cand = state_hint(frontier, n_frontier).join(
-            e, frontier["node"] == e["src"]
-        ).select(
-            *keys,
-            F.col("dst").alias("node"),
-            (F.col("dist") + 1).alias("dist"),
-        )
+        # appears, so the frontier is `dist == r - 1`. The join key is
+        # `node = src AND dist = r - 1` as one equi-key: a non-frontier
+        # row has a null key and skips the probe. Every joined row
+        # yields (node, dist) at pos 0 and, when it matched,
+        # (dst, dist + 1) at pos 1.
+        frontier = F.when(F.col("dist") == r - 1, F.col("node"))
         dist = (
-            dist.unionByName(cand)
-            .groupBy(*keys, "node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
+            dist.join(e, frontier == F.col("src"), "left")
+            .select(*keys, "dist", F.posexplode(F.array("node", "dst")))
+            .filter((F.col("pos") == 0) | F.col("col").isNotNull())
+            .groupBy(*keys, F.col("col").alias("node"))
+            .agg(F.min(F.col("dist") + F.col("pos")).alias("dist"))
         )
-        frontier = dist.filter(F.col("dist") == r)
-    e.unpersist()
     return dist
 
 

@@ -386,9 +386,10 @@ _BFS_SEEDS_SQL = (
 def sssp_copurchase_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS hop distances from the 5 best-selling parts over the
     co-purchase graph (operators/sssp.py): frontier-delta min-
-    relaxation, 4 rounds, reported as the (dist, n_nodes) reach
-    histogram. Integer hop logic ⇒ the unrolled DuckDB twin
-    hash-matches; fixed point pinned via sssp.converged in tests."""
+    relaxation, 4 rounds built as one lazy plan (no job until
+    collect), reported as the (dist, n_nodes) reach histogram.
+    Integer hop logic ⇒ the unrolled DuckDB twin hash-matches; fixed
+    point pinned via sssp.converged in tests."""
     li = _t(spark, sf_dir, "lineitem")
     edges = copurchase_edges(li)
     seeds = (
@@ -547,8 +548,9 @@ def centrality_harmonic_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the same 5 hub seeds as sssp_copurchase_reach — the
     closeness-family ranking that tolerates disconnected components
     (unreached nodes contribute 0, not ∞). One multi-source BFS with
-    the seed id carried in the state (per-round frontier equi-join +
-    (seed, node) min aggregate); reciprocal sums are exact integers
+    the seed id carried in the state, built as one lazy plan (per
+    round: the state left-joined to the edges, frontier rows matching,
+    + (seed, node) min aggregate); reciprocal sums are exact integers
     (Σ 60/d, 60 = lcm(1..6)) so the unrolled DuckDB twin hash-matches
     (operators/sssp.py::harmonic_centrality)."""
     from movie_rankings_spark.operators.sssp import harmonic_centrality

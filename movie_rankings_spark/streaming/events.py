@@ -296,7 +296,8 @@ def run_to_batch(
     state_partitions: int | None = 8,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into
-    an in-memory table and return it as a batch DataFrame.
+    an in-memory table and return it as a batch DataFrame. The sink's
+    temp view is dropped before returning; the frame keeps its rows.
 
     ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
     stream (restored afterwards): a streaming job freezes its state
@@ -332,7 +333,9 @@ def run_to_batch(
         # keeping it would only accumulate — ~1 GB over a few hundred
         # bench/test runs (r9, the _scratch leak class).
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def enrich_with_static(events: DataFrame, user_dim: DataFrame) -> DataFrame:

@@ -17,8 +17,10 @@ from movie_rankings_spark.operators.overlap import (
 from movie_rankings_spark.operators.sssp import (
     bfs_distances,
     converged,
+    harmonic_centrality,
     hop_histogram,
 )
+from movie_rankings_spark.session import session_conf
 
 
 def _sym(pairs):
@@ -49,19 +51,71 @@ def _py_bfs(edges, seeds):
     return dist
 
 
+#: path + branch + disconnected island
+_PBI = _sym([(0, 1), (1, 2), (2, 3), (1, 10), (10, 11), (50, 51)])
+
+
 def test_bfs_matches_python_reference(spark):
-    # path + branch + disconnected island
-    edges = _sym(
-        [(0, 1), (1, 2), (2, 3), (1, 10), (10, 11), (50, 51)]
-    )
-    df = spark.createDataFrame(edges, "src long, dst long")
+    df = spark.createDataFrame(_PBI, "src long, dst long")
     seeds = spark.createDataFrame([(0,)], "node long")
     got = {
         r["node"]: r["dist"]
         for r in bfs_distances(df, seeds, n_rounds=10).collect()
     }
-    assert got == _py_bfs(edges, [0])
+    assert got == _py_bfs(_PBI, [0])
     assert 50 not in got and 51 not in got  # island unreached
+
+
+def test_bfs_shuffle_join_path_matches(spark):
+    # broadcasts off: the shuffle-join plan a too-large edge list takes
+    df = spark.createDataFrame(_PBI, "src long, dst long")
+    seeds = spark.createDataFrame([(0,)], "node long")
+    with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        out = bfs_distances(df, seeds, n_rounds=10)
+        got = {r["node"]: r["dist"] for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan
+    assert got == _py_bfs(_PBI, [0])
+
+
+def test_bfs_builds_without_jobs_or_caches(spark):
+    """The bounded-round loop is one lazy plan: building it runs no
+    Spark job, and running it leaves no persisted RDD behind."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame(_PBI, "src long, dst long")
+    seeds = spark.createDataFrame([(0,), (50,)], "node long")
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
+    group = "bfs-build-probe"
+    sc.setJobGroup(group, "build only")
+    try:
+        dist = bfs_distances(df, seeds, n_rounds=6)
+        hc = harmonic_centrality(df, seeds, n_rounds=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    dist.collect()
+    hc.collect()
+    assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
+
+
+def test_bfs_sink_seed_stays_at_zero(spark):
+    # 3 has no out-edges: it is reached from nowhere and expands nothing
+    df = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
+    seeds = spark.createDataFrame([(3,), (0,)], "node long")
+    got = {
+        r["node"]: r["dist"]
+        for r in bfs_distances(df, seeds, n_rounds=4).collect()
+    }
+    assert got == {3: 0, 0: 0, 1: 1, 2: 2}
+
+
+def test_bfs_duplicate_seeds_one_row_per_node(spark):
+    edges = _sym([(0, 1), (1, 2)])
+    df = spark.createDataFrame(edges, "src long, dst long")
+    seeds = spark.createDataFrame([(0,), (0,), (1,)], "node long")
+    rows = [(r["node"], r["dist"]) for r in bfs_distances(df, seeds, 3).collect()]
+    assert sorted(rows) == [(0, 0), (1, 0), (2, 1)]
 
 
 def test_bfs_multi_seed_takes_min(spark):

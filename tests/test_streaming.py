@@ -11,13 +11,10 @@ from pyspark.sql import functions as F
 from movie_rankings_spark.streaming import events as ev
 
 
-def test_tumbling_stream_equals_batch(spark, sf_dir):
-    stream_out = ev.run_to_batch(
-        ev.tumbling_daily_counts(ev.events_stream(spark, sf_dir))
-    )
+def _batch_daily_counts(spark, sf_dir):
     from movie_rankings_spark.catalog import load_table
 
-    batch = (
+    return (
         load_table(spark, sf_dir, "events")
         .groupBy(F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
                  "event_type")
@@ -28,9 +25,34 @@ def test_tumbling_stream_equals_batch(spark, sf_dir):
             ),
         )
     )
+
+
+def test_tumbling_stream_equals_batch(spark, sf_dir):
+    stream_out = ev.run_to_batch(
+        ev.tumbling_daily_counts(ev.events_stream(spark, sf_dir))
+    )
     s = {tuple(r) for r in stream_out.collect()}
-    b = {tuple(r) for r in batch.collect()}
+    b = {tuple(r) for r in _batch_daily_counts(spark, sf_dir).collect()}
     assert s == b
+
+
+def test_run_to_batch_leaves_no_sink_view(spark, sf_dir):
+    """The memory sink's stream_<uuid> view is dropped before
+    run_to_batch returns; the returned frame keeps its rows."""
+    def sink_views():
+        return {
+            t.name for t in spark.catalog.listTables() if t.name.startswith("stream_")
+        }
+
+    before = sink_views()
+    out = ev.run_to_batch(
+        ev.tumbling_daily_counts(ev.events_stream(spark, sf_dir))
+    )
+    assert sink_views() == before
+    want = sorted(map(tuple, _batch_daily_counts(spark, sf_dir).collect()))
+    assert sorted(map(tuple, out.collect())) == want
+    # a new aggregate over the frame still reads the sink's rows
+    assert out.agg(F.sum("n_events")).first()[0] == sum(r[2] for r in want)
 
 
 def test_dedup_within_watermark_removes_planted_dups(spark, tmp_path):

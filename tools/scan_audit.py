@@ -190,6 +190,11 @@ KNOWN_LEGIT = {
     "corpus_heaps_law",  # persisted+materialized per-source moments; cache-text artifact
     "hll_audience_overlap",  # persisted+materialized register table feeds singles/pairs/unions; cache-text artifact
     "dedup_boilerplate_strip",  # persisted chunk table feeds recurring-set + anti-join + totals (InMemoryTableScan=3); cache-text artifact
+    # one lazy bounded-round BFS plan: the pre-execution text repeats
+    # the edge subtree once per round (4) + the seeds scan; executed,
+    # the final plan has 2 FileScans, the edge broadcast reused 3x
+    # (ReusedExchange):
+    "sssp_copurchase_reach", "centrality_harmonic_hubs",
 }
 
 

@@ -1,15 +1,20 @@
 """Table catalog over the driver's synthetic parquet tables.
 
-Schemas documented in FIXTURES.md §B. All reads are plain
-``spark.read.parquet`` so Catalyst gets native filter pushdown and
-column pruning for free — never pre-materialize or cache here.
+Schemas documented in FIXTURES.md §B. Every read is a bare parquet
+scan, so Catalyst gets native filter pushdown and column pruning for
+free — never pre-materialize or cache here. Spark infers each file's
+schema once (``file_meta``); later loads pass it back and run no job.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -31,10 +36,48 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: scans below this on-disk size never fan out (dimension tables —
-#: region/nation/supplier — are broadcast-side everywhere; an extra
-#: exchange would be pure overhead)
-_FANOUT_MIN_BYTES = int(os.environ.get("MRS_SCAN_FANOUT_MIN_BYTES", "65536"))
+class FileMeta(NamedTuple):
+    schema: T.StructType
+    row_groups: int
+    size: int
+
+
+#: session confs that change the schema Spark infers from a footer
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+#: (path, (file, size, mtime_ns) per parquet file, inference confs) -> meta
+_FILE_META: dict[tuple, FileMeta] = {}
+
+
+def file_meta(spark: SparkSession, path: str) -> FileMeta:
+    """Spark's inferred schema, row-group count and bytes on disk of the
+    parquet file (or directory of part files) at ``path``; only a memo
+    miss runs Spark's schema-inference job. Raises OSError if missing."""
+    import pyarrow.parquet as pq
+
+    parts = [path]
+    if os.path.isdir(path):  # a directory of part files, e.g. a stream source
+        parts = sorted(glob.glob(os.path.join(path, "[!_]*.parquet")))
+    files = tuple((f, (st := os.stat(f)).st_size, st.st_mtime_ns) for f in parts)
+    key = (path, files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    meta = _FILE_META.get(key)
+    if meta is None:
+        meta = _FILE_META[key] = FileMeta(
+            spark.read.parquet(path).schema,
+            sum(pq.read_metadata(f).num_row_groups for f, _, _ in files),
+            sum(size for _, size, _ in files),
+        )
+    return meta
+
+
+#: scans below this on-disk size never fan out: dimension tables are
+#: broadcast-side everywhere, so an extra exchange is pure overhead
+_FANOUT_MIN_BYTES = 65536
 
 #: hash-repartition key per table: a (near-)unique id, so the spread
 #: is even; HASH partitioning (not round-robin) because it is
@@ -53,62 +96,26 @@ _FANOUT_KEY = {
 }
 
 
-#: memoized scan-partition probes: (path, size, mtime_ns, target) -> n_parts.
-#: A plan-shape fact, not data — probing costs a full analyze/plan
-#: cycle (df.rdd), which the r10 blanket fan-out paid on EVERY
-#: load_table call of every query.
-_SCAN_PARTS_CACHE: dict[tuple[str, int, int, int], int] = {}
-
-
-def _fanout_small_scan(df: DataFrame, path: str, key: str | None) -> DataFrame:
+def _fanout_small_scan(df: DataFrame, meta: FileMeta, key: str | None) -> DataFrame:
     """Widen an UNSPLITTABLE small scan to the session's core count
-    (r10; guide §2.5 "input skew: one huge unsplittable file …
-    repartition immediately after the read", §6 scan parallelism).
+    (guide §2.5 input skew: repartition right after the read; §6).
 
-    The bench parquet files are written as a SINGLE row group, and a
-    parquet scan can only split at row-group boundaries — so no
-    maxPartitionBytes / minPartitionNum setting can widen it, and
-    every scan-side projection, filter, explode, regex, hash and
-    partial aggregate runs in ONE task while the other 31 cores idle.
+    Only the byte split holding a row group's midpoint reads its rows,
+    and the bench files are a SINGLE row group, so no maxPartitionBytes
+    setting can widen the scan: every scan-side projection, filter,
+    regex, hash and partial aggregate runs in ONE task. The exchange is
+    added only when the file has fewer row groups than the session has
+    cores, so on many-row-group data this is the identity.
 
-    r11: OPT-IN per call site (``load_table(..., fanout=True)``), not
-    blanket. The r10 blanket version taxed ~200 light queries with an
-    Exchange + a per-load plan probe (driver geomean 0.863 vs r9) and
-    suppressed runtime bloom-filter injection engine-wide (the
-    exchange sits between scan and join, breaking InjectRuntimeFilter's
-    application-side precondition). The r11 full-bench A/B
-    (MRS_SCAN_FANOUT=1 vs 0, /tmp/bench_AB_fanout{1,0}.json, see
-    OPTIMIZATION_r11.md) measured every registered query both ways;
-    only the ~33 queries whose scan-side work is CPU-heavy enough to
-    win ≥15% opted in.
-
-    Gated on the MEASURED scan partitioning: the exchange is added
-    only when the scan yields fewer splits than the session has cores,
-    so on real deployments — many files / many row groups — this is
-    the identity and the plan is byte-for-byte what it was. Values are
-    partitioning-independent by this engine's exactness conventions
-    (decimal/integer aggregates, order-stated windows), re-verified
-    for every registered query against the DuckDB oracle.
-    MRS_SCAN_FANOUT=0 disables every fan-out, =all restores the r10
-    blanket behaviour (both are A/B knobs)."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return df
-    if st.st_size < _FANOUT_MIN_BYTES:
-        return df
+    OPT-IN per call site (``load_table(..., fanout=True)``): a blanket
+    fan-out taxed ~200 light queries with an Exchange and blocked
+    runtime bloom-filter injection (OPTIMIZATION_r11.md). Values are
+    partitioning-independent by this engine's exactness conventions,
+    verified per query against the DuckDB oracle."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    # mtime: a file rewritten at the same size must be probed again
-    memo_key = (path, st.st_size, st.st_mtime_ns, target)
-    n_parts = _SCAN_PARTS_CACHE.get(memo_key)
-    if n_parts is None:
-        n_parts = df.rdd.getNumPartitions()
-        _SCAN_PARTS_CACHE[memo_key] = n_parts
-    if n_parts >= target:
+    if meta.size < _FANOUT_MIN_BYTES or meta.row_groups >= target:
         return df
-    if key is not None:
-        return df.repartition(target, df[key])
-    return df.repartition(target)
+    return df.repartition(target, *([df[key]] if key else []))
 
 
 def load_table(
@@ -116,31 +123,23 @@ def load_table(
 ) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
+    path = table_path(sf_dir, name)
+    try:
+        meta = file_meta(spark, path)
+    except OSError:  # missing: the plain read raises Spark's own error
+        return spark.read.parquet(path)
+    df = spark.read.schema(meta.schema).parquet(path)
     if name == "events":
-        df = _load_events(spark, sf_dir)
-    else:
-        df = spark.read.parquet(table_path(sf_dir, name))
-    mode = os.environ.get("MRS_SCAN_FANOUT", "1")
-    if mode == "0" or not (fanout or mode == "all"):
-        return df
-    return _fanout_small_scan(df, table_path(sf_dir, name), _FANOUT_KEY.get(name))
+        df = events_ts_micros(df)
+    return _fanout_small_scan(df, meta, _FANOUT_KEY.get(name)) if fanout else df
 
 
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.ts is TIMESTAMP(NANOS) in parquet. Depending on the Spark
-    build, that column surfaces as either raw nanos BIGINT (older 4.x
-    honoring spark.sql.legacy.parquet.nanosAsLong, set in session.py)
-    or natively as TIMESTAMP_NTZ truncated to micros (4.1+, where the
-    legacy conf is inert). Both paths normalize to a plain TIMESTAMP at
-    microsecond precision — bit-identical to DuckDB's epoch_us(ts), so
-    oracle comparisons agree regardless of build."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    path = table_path(sf_dir, "events")
-    raw = spark.read.parquet(path)
-    ts_type = raw.schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
+def events_ts_micros(raw: DataFrame) -> DataFrame:
+    """events.ts is TIMESTAMP(NANOS) in parquet: raw nanos BIGINT on
+    builds honoring spark.sql.legacy.parquet.nanosAsLong (session.py),
+    micro-truncated TIMESTAMP_NTZ on 4.1+. Both become a plain micros
+    TIMESTAMP, bit-identical to DuckDB's epoch_us(ts)."""
+    if isinstance(raw.schema["ts"].dataType, T.LongType):
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 

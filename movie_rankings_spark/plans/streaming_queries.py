@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import load_table
 from movie_rankings_spark.plans.registry import REGISTRY
 from movie_rankings_spark.scratch import scratch_dir
 from movie_rankings_spark.session import session_conf
@@ -145,8 +146,6 @@ def stream_static_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events as a stream joined to the static customer dimension
     (stream-static broadcast join), aggregated per market segment —
     checked against the equivalent batch join."""
-    from movie_rankings_spark.catalog import load_table
-
     dim = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") < 150)
@@ -565,14 +564,13 @@ def _stage_dedup_stream(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     materialized once as the stored LSH index."""
     import os
 
-    from movie_rankings_spark.catalog import table_path
     from movie_rankings_spark.streaming.dedup_stream import write_corpus_index
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     root = os.path.dirname(ev._CHECKPOINT_ROOT)
     src_dir = os.path.join(root, "stream_src", f"docs_batch_{tag}")
     idx_dir = os.path.join(root, "stream_src", f"docs_index_{tag}")
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     hb = F.substring(F.md5(F.col("doc_id").cast("string")), 30, 1)
     if not os.path.exists(os.path.join(src_dir, "_SUCCESS")):
         docs.filter(hb.isin("0", "1")).repartition(2, "doc_id").write.mode(
@@ -976,7 +974,6 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from movie_rankings_spark.catalog import table_path
     from movie_rankings_spark.operators.drift import psi_bins
     from movie_rankings_spark.streaming.sketch_stream import (
         current_cells,
@@ -1001,7 +998,7 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bin")
         .agg(F.sum("n").cast("long").alias("cl"))
     )
-    events = spark.read.parquet(table_path(sf_dir, "events"))
+    events = load_table(spark, sf_dir, "events")
     v = F.col("value")
     bin_ = F.least(
         F.lit(19),

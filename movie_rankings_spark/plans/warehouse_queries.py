@@ -558,14 +558,12 @@ def bloom_semijoin_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     ):
         # plan-contract query: InjectRuntimeFilter only fires when the
-        # application side is a bare scan, so read the tables directly
-        # — the r10 small-scan fan-out exchange (catalog.py) would sit
-        # between scan and join and suppress the injection this query
-        # exists to certify. Values are unaffected either way.
-        from movie_rankings_spark.catalog import table_path
-
-        li = spark.read.parquet(table_path(sf_dir, "lineitem"))
-        orders = spark.read.parquet(table_path(sf_dir, "orders")).filter(
+        # application side is a bare scan, which is what load_table
+        # gives without fanout=True — the small-scan fan-out exchange
+        # (catalog.py) would sit between scan and join and suppress the
+        # injection this query exists to certify.
+        li = load_table(spark, sf_dir, "lineitem")
+        orders = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         )
         joined = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).agg(

@@ -48,7 +48,7 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # On Spark builds where TIMESTAMP(NANOS) parquet is rejected,
-        # surface it as raw nanos BIGINT (catalog._load_events then
+        # surface it as raw nanos BIGINT (catalog.events_ts_micros then
         # truncates to micros). Inert on 4.1+, which reads NANOS
         # natively as micro-truncated TIMESTAMP_NTZ.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

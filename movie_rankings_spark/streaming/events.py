@@ -34,7 +34,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_rankings_spark.catalog import table_path
+from movie_rankings_spark.catalog import events_ts_micros, file_meta, table_path
 from movie_rankings_spark.session import session_conf
 
 EVENTS_RAW_SCHEMA = (
@@ -81,22 +81,20 @@ def read_events_stream(
 
     The source column is TIMESTAMP(NANOS) (driver file) or whatever a
     restage wrote; the user-supplied stream schema must match how this
-    Spark build surfaces it (see catalog._load_events), so probe the
-    batch reader's schema once — micro-truncated TIMESTAMP_NTZ on
-    4.1+ (where the nanosAsLong conf is inert), raw nanos BIGINT on
-    builds honoring it. Both normalize identically to the batch
-    catalog, so stream results match batch oracles."""
+    Spark build surfaces it, so check the ts type in the batch
+    reader's memoized schema (catalog.file_meta: one inference job per
+    directory state) — micro-truncated TIMESTAMP_NTZ on 4.1+, raw nanos
+    BIGINT on builds honoring nanosAsLong — and normalize ts exactly as
+    the batch catalog does, so stream results match batch oracles."""
     from pyspark.sql import types as T
 
-    probe = spark.read.parquet(src_dir).schema["ts"].dataType
+    probe = file_meta(spark, src_dir).schema["ts"].dataType
     reader = spark.readStream
     for k, v in reader_options.items():
         reader = reader.option(k, v)
-    if isinstance(probe, T.LongType):
-        raw = reader.schema(EVENTS_RAW_SCHEMA_NANOS_LONG).parquet(src_dir)
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    raw = reader.schema(EVENTS_RAW_SCHEMA).parquet(src_dir)
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    nanos = isinstance(probe, T.LongType)
+    raw = reader.schema(EVENTS_RAW_SCHEMA_NANOS_LONG if nanos else EVENTS_RAW_SCHEMA)
+    return events_ts_micros(raw.parquet(src_dir))
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

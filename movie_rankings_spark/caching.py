@@ -28,9 +28,7 @@ thread idents, so a raw-ident registry would let a NEW thread inherit
 without releasing would leak their bucket forever. Every registry
 access first reaps buckets whose owning thread is gone, unpersisting
 the orphaned frames best-effort. ``release_persisted`` from a thread
-touches only that thread's entries; :class:`scoped_persists` offers
-an explicit per-query registry for callers who want release bounded
-to a block regardless of threading.
+touches only that thread's entries.
 """
 
 from __future__ import annotations
@@ -132,36 +130,6 @@ def tracked_count() -> int:
         n = len(entry[1]) if entry is not None and entry[0]() is t else 0
     _unpersist_quiet(orphans)
     return n
-
-
-class scoped_persists:
-    """Context manager bounding persist tracking to a block: on exit,
-    releases exactly the persists the block created on this thread
-    (entries tracked before entry survive untouched).
-
-    with scoped_persists():
-        df = expensive_operator(...)
-        df.collect()
-    # the operator's intermediates are unpersisted here
-    """
-
-    def __enter__(self) -> "scoped_persists":
-        bucket = _bucket()
-        with _LOCK:
-            self._mark = len(bucket)
-        return self
-
-    def __exit__(self, *exc) -> None:
-        t = threading.current_thread()
-        with _LOCK:
-            entry = _TRACKED.get(t.ident)
-            if entry is None or entry[0]() is not t:
-                frames: list[DataFrame] = []
-            else:
-                bucket = entry[1]
-                frames = bucket[self._mark :]
-                del bucket[self._mark :]
-        _unpersist_quiet(frames)
 
 
 def _persistent_rdds(sc) -> dict[int, object]:

@@ -10,11 +10,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_rankings_spark.catalog import load_table
+from movie_rankings_spark.catalog import load_table, table_path
 from movie_rankings_spark.plans.registry import REGISTRY
 from movie_rankings_spark.scratch import scratch_dir
 from movie_rankings_spark.session import session_conf
 from movie_rankings_spark.streaming import events as ev
+from movie_rankings_spark.streaming.ingest import read_file_stream, stage
 
 _TUMBLING_ORACLE = """
 SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
@@ -275,23 +276,22 @@ from movie_rankings_spark.plans.relational_ext_queries import (  # noqa: E402
 )
 
 
-def _stage_split_events(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
-    """Deterministically split the events table into n parquet files
-    so the availableNow + maxFilesPerTrigger=1 stream sees n
-    micro-batches (idempotent staging; ts column keeps whatever type
-    this Spark build surfaces — read_events_stream re-probes it)."""
-    import os
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = os.path.join(
-        os.path.dirname(ev._CHECKPOINT_ROOT), "stream_src", f"events_split_{tag}_{n}"
+def _stage_split(
+    spark: SparkSession, sf_dir: str, table: str, key: str, n: int
+) -> str:
+    """The table hash-split on ``key`` into n landing-zone files, so an
+    availableNow + maxFilesPerTrigger=1 stream sees n micro-batches
+    (events.ts keeps whatever type this Spark build surfaces —
+    read_events_stream re-probes it)."""
+    src = table_path(sf_dir, table)
+    return stage(
+        src,
+        f"{table}_split{n}",
+        lambda dst: spark.read.parquet(src)
+        .repartition(n, key)
+        .write.mode("overwrite")
+        .parquet(dst),
     )
-    if not os.path.exists(os.path.join(dst, "_SUCCESS")):
-        from movie_rankings_spark.catalog import table_path
-
-        raw = spark.read.parquet(table_path(sf_dir, "events"))
-        raw.repartition(n, "event_id").write.mode("overwrite").parquet(dst)
-    return dst
 
 
 def _stage_time_split_events(
@@ -303,46 +303,32 @@ def _stage_time_split_events(
     in event-time order — the arrival discipline the timer-based
     session processor needs (a hash split makes every batch span the
     full time range, so the watermark jumps to max after batch 1 and
-    timer firings race later events). Idempotent staging."""
+    timer firings race later events)."""
     import os
     import shutil
 
     from pyspark.sql import Window
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = os.path.join(
-        os.path.dirname(ev._CHECKPOINT_ROOT),
-        "stream_src",
-        f"events_timesplit_{tag}_{n}",
-    )
-    marker = os.path.join(dst, "_STAGED")
-    if not os.path.exists(marker):
-        from movie_rankings_spark.catalog import table_path
+    src = table_path(sf_dir, "events")
 
-        os.makedirs(dst, exist_ok=True)
-        raw = spark.read.parquet(table_path(sf_dir, "events"))
-        sliced = raw.withColumn(
-            "_slice",
-            F.ntile(n).over(
-                Window.orderBy("ts", "event_id")
-            ),
+    def write(dst: str) -> None:
+        sliced = spark.read.parquet(src).withColumn(
+            "_slice", F.ntile(n).over(Window.orderBy("ts", "event_id"))
         )
         for i in range(1, n + 1):
             tmp = os.path.join(dst, f"_tmp_{i}")
             sliced.filter(F.col("_slice") == i).drop("_slice").coalesce(
                 1
             ).write.mode("overwrite").parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            )
+            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
             final = os.path.join(dst, f"slice_{i:02d}.parquet")
-            shutil.move(os.path.join(tmp, part), final)
+            os.rename(os.path.join(tmp, part), final)
             shutil.rmtree(tmp)
             # strictly increasing mtimes: FileStreamSource orders by
             # (modification time, path); both orders agree here
             os.utime(final, (1_700_000_000 + i, 1_700_000_000 + i))
-        open(marker, "w").close()
-    return dst
+
+    return stage(src, f"events_timesplit{n}", write)
 
 
 _TWS_SESSION_ORACLE = """
@@ -410,15 +396,12 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction — which is exactly what the shared oracle asserts."""
     import os
 
-    src = _stage_split_events(spark, sf_dir, n=4)
+    src = _stage_split(spark, sf_dir, "events", "event_id", 4)
     run_dir = scratch_dir("upsert")
-    from movie_rankings_spark.streaming.upsert import (
-        current_snapshot,
-        stream_upsert,
-    )
+    from movie_rankings_spark.streaming.upsert import stream_upsert
 
     stream = ev.read_events_stream(spark, src, maxFilesPerTrigger=1)
-    stream_upsert(
+    snap = stream_upsert(
         stream,
         table_dir=os.path.join(run_dir, "table"),
         checkpoint_dir=os.path.join(run_dir, "ckpt"),
@@ -426,7 +409,6 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         version_cols=["ts", "event_id"],
         payload_cols=["value", "props"],
     )
-    snap = current_snapshot(spark, os.path.join(run_dir, "table"))
     return snap.select(
         "user_id",
         "event_type",
@@ -481,7 +463,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from movie_rankings_spark.streaming.stateful import user_lifetime_tws
 
-    src = _stage_split_events(spark, sf_dir, n=2)
+    src = _stage_split(spark, sf_dir, "events", "event_id", 2)
     with session_conf(spark, _ROCKSDB_STATE):
         stream = ev.read_events_stream(spark, src, maxFilesPerTrigger=1)
         out = ev.run_to_batch(
@@ -533,7 +515,7 @@ def stream_tws_lastk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from movie_rankings_spark.streaming.stateful import user_lastk_tws
 
-    src = _stage_split_events(spark, sf_dir, n=2)
+    src = _stage_split(spark, sf_dir, "events", "event_id", 2)
     with session_conf(spark, _ROCKSDB_STATE):
         stream = ev.read_events_stream(spark, src, maxFilesPerTrigger=1)
         out = ev.run_to_batch(
@@ -559,27 +541,27 @@ from movie_rankings_spark.plans.llm_queries import _INCR_ORACLE  # noqa: E402
 
 
 def _stage_dedup_stream(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Idempotent staging: the md5-split ingest slice (hb 0/1) as TWO
-    landing-zone files → two micro-batches; the rest of the corpus
-    materialized once as the stored LSH index."""
-    import os
-
+    """The md5-split ingest slice (hb 0/1) as TWO landing-zone files →
+    two micro-batches; the rest of the corpus materialized as the
+    stored LSH index."""
     from movie_rankings_spark.streaming.dedup_stream import write_corpus_index
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.dirname(ev._CHECKPOINT_ROOT)
-    src_dir = os.path.join(root, "stream_src", f"docs_batch_{tag}")
-    idx_dir = os.path.join(root, "stream_src", f"docs_index_{tag}")
+    src = table_path(sf_dir, "documents")
     docs = load_table(spark, sf_dir, "documents")
     hb = F.substring(F.md5(F.col("doc_id").cast("string")), 30, 1)
-    if not os.path.exists(os.path.join(src_dir, "_SUCCESS")):
-        docs.filter(hb.isin("0", "1")).repartition(2, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-    if not os.path.exists(
-        os.path.join(idx_dir, "sets", "_SUCCESS")
-    ):
-        write_corpus_index(docs.filter(~hb.isin("0", "1")), idx_dir)
+    src_dir = stage(
+        src,
+        "docs_batch",
+        lambda dst: docs.filter(hb.isin("0", "1"))
+        .repartition(2, "doc_id")
+        .write.mode("overwrite")
+        .parquet(dst),
+    )
+    idx_dir = stage(
+        src,
+        "docs_index",
+        lambda dst: write_corpus_index(docs.filter(~hb.isin("0", "1")), dst),
+    )
     return src_dir, idx_dir
 
 
@@ -587,11 +569,11 @@ def _stage_dedup_stream(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous ingest dedup: new documents land as files, each
     micro-batch (maxFilesPerTrigger=1) is near-dup-checked against
-    the PERSISTED corpus LSH index and its verified pairs appended —
-    streaming/dedup_stream.py. Per-batch cost is batch×bands index
+    the PERSISTED corpus LSH index and its verified pairs written
+    under the batch's id — streaming/dedup_stream.py. Per-batch cost is batch×bands index
     lookups + exact verification of candidates; exactly-once file
-    processing makes the appended table equal the batch query, so the
-    exact batch oracle applies verbatim."""
+    processing and replay-safe batch writes make the pairs table equal
+    the batch query, so the exact batch oracle applies verbatim."""
     import os
 
     from movie_rankings_spark.streaming.dedup_stream import (
@@ -601,19 +583,14 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src_dir, idx_dir = _stage_dedup_stream(spark, sf_dir)
     run_dir = scratch_dir("dedup_stream")
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    out_dir = os.path.join(run_dir, "pairs")
-    stream_incremental_dedup(
+    stream = read_file_stream(spark, src_dir, DOCS_SCHEMA, maxFilesPerTrigger=1)
+    pairs = stream_incremental_dedup(
         stream,
         index_dir=idx_dir,
-        out_dir=out_dir,
+        out_dir=os.path.join(run_dir, "pairs"),
         checkpoint_dir=os.path.join(run_dir, "ckpt"),
     )
-    return spark.read.parquet(out_dir).orderBy("batch_doc", "corpus_doc")
+    return pairs.orderBy("batch_doc", "corpus_doc")
 
 
 # --- streaming CMS sketch maintenance ---------------------------------------
@@ -622,23 +599,6 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # monoid, so the maintained table after N micro-batches is identical
 # to the one-shot sketch
 from movie_rankings_spark.plans.llm_queries import _CMS_ORACLE  # noqa: E402
-
-
-def _stage_split_docs(spark: SparkSession, sf_dir: str, n: int = 3) -> str:
-    """The full documents table split into n landing-zone files
-    (idempotent) so the stream sees n micro-batches."""
-    import os
-
-    from movie_rankings_spark.catalog import table_path
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = os.path.join(
-        os.path.dirname(ev._CHECKPOINT_ROOT), "stream_src", f"docs_split_{tag}_{n}"
-    )
-    if not os.path.exists(os.path.join(dst, "_SUCCESS")):
-        docs = spark.read.parquet(table_path(sf_dir, "documents"))
-        docs.repartition(n, "doc_id").write.mode("overwrite").parquet(dst)
-    return dst
 
 
 @REGISTRY.register("stream_cms_maintained", _CMS_ORACLE)
@@ -655,25 +615,19 @@ def stream_cms_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_rankings_spark.operators.cms import cms_estimate
     from movie_rankings_spark.streaming.dedup_stream import DOCS_SCHEMA
     from movie_rankings_spark.streaming.sketch_stream import (
-        current_cells,
         stream_cms_maintenance,
     )
 
-    src_dir = _stage_split_docs(spark, sf_dir, n=3)
+    src_dir = _stage_split(spark, sf_dir, "documents", "doc_id", 3)
     run_dir = scratch_dir("cms_stream")
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    stream_cms_maintenance(
+    stream = read_file_stream(spark, src_dir, DOCS_SCHEMA, maxFilesPerTrigger=1)
+    cells = stream_cms_maintenance(
         stream,
         table_dir=os.path.join(run_dir, "cells"),
         checkpoint_dir=os.path.join(run_dir, "ckpt"),
         depth=4,
         width=512,
     )
-    cells = current_cells(spark, os.path.join(run_dir, "cells"))
     docs = spark.read.parquet(src_dir)
     truth = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
@@ -715,19 +669,17 @@ def stream_bitmap_users_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from movie_rankings_spark.streaming.sketch_stream import (
-        current_cells,
         stream_bitmap_maintenance,
     )
 
-    src = _stage_split_events(spark, sf_dir, n=4)
+    src = _stage_split(spark, sf_dir, "events", "event_id", 4)
     run_dir = scratch_dir("bm_stream")
     stream = ev.read_events_stream(spark, src, maxFilesPerTrigger=1)
-    stream_bitmap_maintenance(
+    daily = stream_bitmap_maintenance(
         stream,
         table_dir=os.path.join(run_dir, "bm"),
         checkpoint_dir=os.path.join(run_dir, "ckpt"),
-    )
-    daily = current_cells(spark, os.path.join(run_dir, "bm")).persist_tracked()
+    ).persist_tracked()
     daily_counts = (
         daily.groupBy("event_type", "day")
         .agg(F.expr("CAST(sum(bitmap_count(bm)) AS BIGINT)").alias("d"))
@@ -888,14 +840,13 @@ def stream_histogram_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from movie_rankings_spark.streaming.sketch_stream import (
-        current_cells,
         stream_histogram_maintenance,
     )
 
-    src = _stage_split_events(spark, sf_dir, n=4)
+    src = _stage_split(spark, sf_dir, "events", "event_id", 4)
     run_dir = scratch_dir("hist_stream")
     stream = ev.read_events_stream(spark, src, maxFilesPerTrigger=1)
-    stream_histogram_maintenance(
+    daily = stream_histogram_maintenance(
         stream,
         table_dir=os.path.join(run_dir, "cells"),
         checkpoint_dir=os.path.join(run_dir, "ckpt"),
@@ -903,7 +854,6 @@ def stream_histogram_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         step=25.0,
         n_bins=20,
     )
-    daily = current_cells(spark, os.path.join(run_dir, "cells"))
     return (
         daily.groupBy(F.col("event_type").alias("grp"), "bin")
         .agg(
@@ -976,25 +926,23 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from movie_rankings_spark.operators.drift import psi_bins
     from movie_rankings_spark.streaming.sketch_stream import (
-        current_cells,
         stream_histogram_maintenance,
     )
 
-    src = _stage_split_events(spark, sf_dir, n=4)
+    src = _stage_split(spark, sf_dir, "events", "event_id", 4)
     run_dir = scratch_dir("psi_stream")
     stream = ev.read_events_stream(spark, src, maxFilesPerTrigger=1).filter(
         F.col("event_id") % 2 == 1
     )
-    stream_histogram_maintenance(
-        stream,
-        table_dir=os.path.join(run_dir, "cells"),
-        checkpoint_dir=os.path.join(run_dir, "ckpt"),
-        lo=0.0,
-        step=25.0,
-        n_bins=20,
-    )
     live = (
-        current_cells(spark, os.path.join(run_dir, "cells"))
+        stream_histogram_maintenance(
+            stream,
+            table_dir=os.path.join(run_dir, "cells"),
+            checkpoint_dir=os.path.join(run_dir, "ckpt"),
+            lo=0.0,
+            step=25.0,
+            n_bins=20,
+        )
         .groupBy("bin")
         .agg(F.sum("n").cast("long").alias("cl"))
     )

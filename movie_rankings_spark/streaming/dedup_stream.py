@@ -9,7 +9,9 @@ the stored index — `operators/dedup.py::banded_buckets` /
 `shingle_sets`); a landing-zone file stream delivers each new ingest
 batch; per micro-batch the cost is batch×bands index lookups plus
 exact verification of the (tiny) candidate set. The checkpoint makes
-file processing exactly-once, so the appended pairs table equals the
+file processing exactly-once and each batch's pairs overwrite that
+batch's own directory (streaming/ingest.py::append_stream), so even a
+batch replayed after a crash leaves the pairs table equal to the
 one-shot batch answer — which is what lets the registered query
 reuse the exact batch ORACLE, rare for a streaming operator.
 
@@ -22,7 +24,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from movie_rankings_spark.operators.dedup import (
     banded_buckets,
@@ -30,6 +32,7 @@ from movie_rankings_spark.operators.dedup import (
     minhash_signatures,
     shingle_sets,
 )
+from movie_rankings_spark.streaming.ingest import append_stream
 
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
@@ -62,25 +65,17 @@ def stream_incremental_dedup(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-) -> None:
-    """Drain the landing-zone stream (availableNow), appending each
-    micro-batch's verified near-dup pairs to ``out_dir``."""
+) -> DataFrame:
+    """Drain the landing-zone stream (availableNow), writing each
+    micro-batch's verified near-dup pairs under ``out_dir``, and
+    return every pair written there."""
     spark = docs_stream.sparkSession
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def pairs(batch_df: DataFrame) -> DataFrame:
         c_idx = spark.read.parquet(os.path.join(index_dir, "bands"))
         c_sets = spark.read.parquet(os.path.join(index_dir, "sets"))
-        pairs = incremental_pairs_against_index(
+        return incremental_pairs_against_index(
             batch_df, c_idx, c_sets, threshold, num_hashes, bands, shingle_n
         )
-        pairs.write.mode("append").parquet(out_dir)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return append_stream(docs_stream, out_dir, checkpoint_dir, pairs)

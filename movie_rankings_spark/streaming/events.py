@@ -29,6 +29,7 @@ is O(active keys × horizon), independent of stream length.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,6 +37,11 @@ from pyspark.sql import functions as F
 
 from movie_rankings_spark.catalog import events_ts_micros, file_meta, table_path
 from movie_rankings_spark.session import session_conf
+from movie_rankings_spark.streaming.ingest import (
+    read_file_stream,
+    run_available_now,
+    stage,
+)
 
 EVENTS_RAW_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
@@ -54,25 +60,6 @@ _CHECKPOINT_ROOT = os.path.join(
 )
 
 
-def _stage_stream_dir(sf_dir: str) -> str:
-    """The file stream source lists a DIRECTORY; the driver ships
-    events as a single parquet file. Stage it (idempotent copy) into
-    a per-sf directory the source can monitor — in production this
-    directory is the landing zone new files arrive into."""
-    import shutil
-
-    src = table_path(sf_dir, "events")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst_dir = os.path.join(
-        os.path.dirname(_CHECKPOINT_ROOT), "stream_src", f"events_{tag}"
-    )
-    dst = os.path.join(dst_dir, "events.parquet")
-    os.makedirs(dst_dir, exist_ok=True)
-    if not os.path.exists(dst) or os.path.getsize(dst) != os.path.getsize(src):
-        shutil.copyfile(src, dst)
-    return dst_dir
-
-
 def read_events_stream(
     spark: SparkSession, src_dir: str, **reader_options
 ) -> DataFrame:
@@ -89,18 +76,28 @@ def read_events_stream(
     from pyspark.sql import types as T
 
     probe = file_meta(spark, src_dir).schema["ts"].dataType
-    reader = spark.readStream
-    for k, v in reader_options.items():
-        reader = reader.option(k, v)
     nanos = isinstance(probe, T.LongType)
-    raw = reader.schema(EVENTS_RAW_SCHEMA_NANOS_LONG if nanos else EVENTS_RAW_SCHEMA)
-    return events_ts_micros(raw.parquet(src_dir))
+    schema = EVENTS_RAW_SCHEMA_NANOS_LONG if nanos else EVENTS_RAW_SCHEMA
+    return events_ts_micros(
+        read_file_stream(spark, src_dir, schema, **reader_options)
+    )
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as an unbounded stream (file source), ts as micros
-    TIMESTAMP — identical column semantics to the batch catalog."""
-    return read_events_stream(spark, _stage_stream_dir(sf_dir))
+    TIMESTAMP — identical column semantics to the batch catalog.
+
+    The file source lists a DIRECTORY and the driver ships events as a
+    single parquet file, so it is staged (a plain copy, no Spark job)
+    into a landing directory — in production the directory new files
+    arrive into."""
+    src = table_path(sf_dir, "events")
+    landing = stage(
+        src,
+        "events",
+        lambda dst: shutil.copyfile(src, os.path.join(dst, "events.parquet")),
+    )
+    return read_events_stream(spark, landing)
 
 
 def tumbling_daily_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -307,8 +304,6 @@ def run_to_batch(
     here). Pass None to keep the session default — right for Python
     stateful operators whose per-partition work wants the
     parallelism."""
-    import shutil
-
     spark = df.sparkSession
     name = name or f"stream_{uuid.uuid4().hex[:12]}"
     ckpt = os.path.join(_CHECKPOINT_ROOT, name)
@@ -316,15 +311,12 @@ def run_to_batch(
     partitions = None if state_partitions is None else str(state_partitions)
     try:
         with session_conf(spark, {"spark.sql.shuffle.partitions": partitions}):
-            q = (
+            run_available_now(
                 df.writeStream.format("memory")
                 .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+                .outputMode(output_mode),
+                ckpt,
             )
-            q.awaitTermination()
     finally:
         # the checkpoint is single-use by construction (fresh name,
         # availableNow run to completion, memory sink holds the rows):

@@ -1,57 +1,38 @@
 """Streaming sketch maintenance: the count-min cells table kept
-up-to-date by a document file stream (SURVEY.md §2i × A13).
+up-to-date by a document file stream (SURVEY.md §2i × A13), and its
+two siblings over the event stream — per-(type, day, bucket) user-id
+bitmaps and per-(type, day, bin) histogram cells.
 
 This is how frequency/cardinality services actually run at 100 TB:
 the serving store holds the O(d·w) SKETCH, not the vocabulary; each
-ingest batch folds its cell partials in by addition (CMS cells are a
-commutative monoid — the property pinned by the merge test in
-tests/test_cms.py). foreachBatch + a versioned table with an atomic
-pointer gives exactly-once semantics under retries: a replayed batch
+ingest batch folds its cell partials in by a monoid merge (CMS and
+histogram cells add, bitmaps OR — the CMS property is pinned by the
+merge test in tests/test_cms.py). Each table is a versioned
+exactly-once table (streaming/ingest.py::fold_stream); each
+maintenance call returns the published table. A replayed batch
 overwrites its own version, never double-adds.
 
-Because cell addition is commutative+associative, the maintained
-table after draining N micro-batches is BIT-IDENTICAL to the
-one-shot batch sketch — which lets the registered query reuse the
-exact DuckDB oracle of the batch CMS report.
+Because every merge is commutative+associative, the maintained table
+after draining N micro-batches is BIT-IDENTICAL to the one-shot batch
+build — which lets each registered query reuse the exact DuckDB
+oracle of its batch twin.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from movie_rankings_spark.functions.text import words
 from movie_rankings_spark.operators.cms import cms_build
+from movie_rankings_spark.streaming.ingest import fold_stream
 
 
-def _version_dir(table_dir: str, v: int) -> str:
-    return os.path.join(table_dir, f"v={v}")
-
-
-def _versions(table_dir: str) -> list[int]:
-    if not os.path.isdir(table_dir):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("v=")
+def _merge(keys: tuple[str, ...], agg: str, col: str):
+    """The monoid merge of two cell tables: ``agg(col)`` per ``keys``."""
+    return lambda a, b: (
+        a.unionByName(b).groupBy(*keys).agg(F.expr(f"{agg}({col})").alias(col))
     )
-
-
-def _pointer(table_dir: str) -> str:
-    return os.path.join(table_dir, "_CURRENT")
-
-
-def current_cells(spark: SparkSession, table_dir: str) -> DataFrame | None:
-    p = _pointer(table_dir)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        v = int(f.read().strip())
-    return spark.read.parquet(_version_dir(table_dir, v))
 
 
 def stream_cms_maintenance(
@@ -60,48 +41,28 @@ def stream_cms_maintenance(
     checkpoint_dir: str,
     depth: int = 4,
     width: int = 512,
-) -> None:
+) -> DataFrame | None:
     """Drain the document stream (availableNow), folding each
     micro-batch's CMS cell partials into the versioned cells table."""
-    spark = docs_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        toks = batch_df.select(F.explode(words(F.col("text"))).alias("word"))
-        partial = cms_build(toks, "word", depth, width)
-        bases = [v for v in _versions(table_dir) if v < batch_id]
-        base = max(bases) if bases else None
-        if base is not None:
-            cur = spark.read.parquet(_version_dir(table_dir, base))
-            partial = (
-                cur.unionByName(partial)
-                .groupBy("row", "bucket")
-                .agg(F.sum("n").alias("n"))
-            )
-        partial.write.mode("overwrite").parquet(_version_dir(table_dir, batch_id))
-        tmp = _pointer(table_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, _pointer(table_dir))
-        for v in _versions(table_dir):
-            if base is not None and v < base:
-                shutil.rmtree(_version_dir(table_dir, v), ignore_errors=True)
-
-    q = (
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fold_stream(
+        docs_stream,
+        table_dir,
+        checkpoint_dir,
+        lambda batch: cms_build(
+            batch.select(F.explode(words(F.col("text"))).alias("word")),
+            "word",
+            depth,
+            width,
+        ),
+        _merge(("row", "bucket"), "sum", "n"),
     )
-    q.awaitTermination()
 
 
 def stream_bitmap_maintenance(
     events_stream: DataFrame,
     table_dir: str,
     checkpoint_dir: str,
-) -> None:
+) -> DataFrame | None:
     """The EXACT twin of the CMS maintenance above: per-(event_type,
     day, bucket) user-id BITMAPS kept current by the event stream.
     Bitmap OR is commutative, associative AND idempotent — a replayed
@@ -109,45 +70,19 @@ def stream_bitmap_maintenance(
     story in the streaming tier — so the maintained table is
     bit-identical to the batch build and distinct-user rollups read
     from it are EXACT (bitmap_users_rollup's oracle applies)."""
-    spark = events_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = batch_df.groupBy(
+    return fold_stream(
+        events_stream,
+        table_dir,
+        checkpoint_dir,
+        lambda batch: batch.groupBy(
             "event_type",
             F.to_date("ts").alias("day"),
             F.expr("bitmap_bucket_number(user_id)").alias("buck"),
         ).agg(
-            F.expr("bitmap_construct_agg(bitmap_bit_position(user_id))").alias(
-                "bm"
-            )
-        )
-        bases = [v for v in _versions(table_dir) if v < batch_id]
-        base = max(bases) if bases else None
-        if base is not None:
-            cur = spark.read.parquet(_version_dir(table_dir, base))
-            partial = (
-                cur.unionByName(partial)
-                .groupBy("event_type", "day", "buck")
-                .agg(F.expr("bitmap_or_agg(bm)").alias("bm"))
-            )
-        partial.write.mode("overwrite").parquet(_version_dir(table_dir, batch_id))
-        tmp = _pointer(table_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, _pointer(table_dir))
-        for v in _versions(table_dir):
-            if base is not None and v < base:
-                shutil.rmtree(_version_dir(table_dir, v), ignore_errors=True)
-
-    q = (
-        events_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+            F.expr("bitmap_construct_agg(bitmap_bit_position(user_id))").alias("bm")
+        ),
+        _merge(("event_type", "day", "buck"), "bitmap_or_agg", "bm"),
     )
-    q.awaitTermination()
 
 
 def stream_histogram_maintenance(
@@ -157,7 +92,7 @@ def stream_histogram_maintenance(
     lo: float = 0.0,
     step: float = 25.0,
     n_bins: int = 20,
-) -> None:
+) -> DataFrame | None:
     """Third member of the maintained-artifact family (CMS cells,
     bitmaps): the per-(event_type, day, bin) fixed-bin HISTOGRAM kept
     current by the event stream. Cell addition is a commutative
@@ -165,51 +100,18 @@ def stream_histogram_maintenance(
     bit-identical to the one-shot batch build
     (operators/statistics.py::histogram_mergeable_rollup's daily
     stage) and the exact batch rollup oracle applies to any level
-    merged from it. Same exactly-once scheme: per-batch versions + an
-    atomic pointer; a replayed batch overwrites its own version."""
-    spark = events_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        v = F.col("value")
-        bin_ = F.least(
-            F.lit(n_bins - 1),
-            F.greatest(
-                F.lit(0), F.floor((v - F.lit(lo)) / F.lit(step)).cast("int")
-            ),
-        )
-        partial = (
-            batch_df.filter(v.isNotNull())
-            .groupBy(
-                "event_type",
-                F.to_date("ts").alias("day"),
-                bin_.alias("bin"),
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        bases = [b for b in _versions(table_dir) if b < batch_id]
-        base = max(bases) if bases else None
-        if base is not None:
-            cur = spark.read.parquet(_version_dir(table_dir, base))
-            partial = (
-                cur.unionByName(partial)
-                .groupBy("event_type", "day", "bin")
-                .agg(F.sum("n").alias("n"))
-            )
-        partial.write.mode("overwrite").parquet(_version_dir(table_dir, batch_id))
-        tmp = _pointer(table_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, _pointer(table_dir))
-        for b in _versions(table_dir):
-            if base is not None and b < base:
-                shutil.rmtree(_version_dir(table_dir, b), ignore_errors=True)
-
-    q = (
-        events_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    merged from it."""
+    v = F.col("value")
+    bin_ = F.least(
+        F.lit(n_bins - 1),
+        F.greatest(F.lit(0), F.floor((v - F.lit(lo)) / F.lit(step)).cast("int")),
     )
-    q.awaitTermination()
+    return fold_stream(
+        events_stream,
+        table_dir,
+        checkpoint_dir,
+        lambda batch: batch.filter(v.isNotNull())
+        .groupBy("event_type", F.to_date("ts").alias("day"), bin_.alias("bin"))
+        .agg(F.count(F.lit(1)).alias("n")),
+        _merge(("event_type", "day", "bin"), "sum", "n"),
+    )

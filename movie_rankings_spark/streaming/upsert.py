@@ -3,19 +3,16 @@ table from a changelog stream via ``foreachBatch`` (the CDC MERGE
 pattern on plain parquet).
 
 Per micro-batch: compact the batch to its own snapshot
-(operators/changelog.py), merge it with the published snapshot, and
+(operators/changelog.py), merge it with the previous version, and
 publish a NEW versioned directory, flipping a pointer file last. The
 merge (argmax over versions + n_versions addition) is associative and
 commutative, so the result is independent of how the changelog splits
 into batches.
 
-Exactly-once under crash replay: batch N always merges against the
-newest version STRICTLY BELOW N — never the pointer — so a replayed
-batch (published but not yet committed to the checkpoint when the
-job died) rebuilds byte-identical content for its own version
-directory instead of double-applying itself into it. Versions below
-the merge base are pruned after publish, bounding the table at two
-versions.
+Exactly-once under crash replay comes from the shared versioned
+table (streaming/ingest.py::fold_stream): batch N merges against the
+newest version STRICTLY BELOW N, so a replayed batch rebuilds its own
+version instead of double-applying itself.
 
 On a lakehouse table format (Delta/Iceberg) the publish step becomes
 ``MERGE INTO`` and the pointer is the table log; the batch-compact +
@@ -27,14 +24,13 @@ here is zero, so a 100 TB key space costs executor memory nothing.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from movie_rankings_spark.operators.changelog import latest_snapshot
+from movie_rankings_spark.streaming.ingest import fold_stream
 
 
 def merge_snapshots(
@@ -61,35 +57,6 @@ def merge_snapshots(
     )
 
 
-def _version_dir(table_dir: str, version: int) -> str:
-    return os.path.join(table_dir, f"v{version:08d}")
-
-
-def _versions(table_dir: str) -> list[int]:
-    if not os.path.isdir(table_dir):
-        return []
-    return sorted(
-        int(d[1:])
-        for d in os.listdir(table_dir)
-        if d.startswith("v") and d[1:].isdigit()
-    )
-
-
-def _pointer_path(table_dir: str) -> str:
-    return os.path.join(table_dir, "_LATEST")
-
-
-def current_snapshot(spark: SparkSession, table_dir: str) -> DataFrame | None:
-    """The published snapshot (what readers see), or None before the
-    first publish."""
-    ptr = _pointer_path(table_dir)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        version = int(f.read().strip())
-    return spark.read.parquet(_version_dir(table_dir, version))
-
-
 def stream_upsert(
     changelog: DataFrame,
     table_dir: str,
@@ -97,38 +64,16 @@ def stream_upsert(
     keys: Sequence[str],
     version_cols: Sequence[str],
     payload_cols: Sequence[str],
-) -> None:
+) -> DataFrame | None:
     """Drain the changelog stream into ``table_dir`` as a maintained
-    latest-wins snapshot (availableNow). Call repeatedly as new files
-    land; the checkpoint skips already-applied batches."""
-    spark = changelog.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_snap = latest_snapshot(batch_df, keys, version_cols, payload_cols)
-        bases = [v for v in _versions(table_dir) if v < batch_id]
-        base = max(bases) if bases else None
-        if base is None:
-            merged = batch_snap
-        else:
-            cur = spark.read.parquet(_version_dir(table_dir, base))
-            merged = merge_snapshots(
-                cur, batch_snap, keys, version_cols, payload_cols
-            )
-        # write the new version (lazy read of `base` happens here),
-        # flip the pointer atomically, then prune below the base
-        merged.write.mode("overwrite").parquet(_version_dir(table_dir, batch_id))
-        tmp = _pointer_path(table_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, _pointer_path(table_dir))
-        for v in _versions(table_dir):
-            if base is not None and v < base:
-                shutil.rmtree(_version_dir(table_dir, v), ignore_errors=True)
-
-    q = (
-        changelog.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    latest-wins snapshot (availableNow) and return the published
+    snapshot. Call repeatedly as new files land; the checkpoint skips
+    already-applied batches."""
+    cols = (keys, version_cols, payload_cols)
+    return fold_stream(
+        changelog,
+        table_dir,
+        checkpoint_dir,
+        lambda batch: latest_snapshot(batch, *cols),
+        lambda a, b: merge_snapshots(a, b, *cols),
     )
-    q.awaitTermination()

@@ -156,13 +156,13 @@ def test_stream_dedup_exact_distinct(spark, sf_dir):
     assert out.count() == out.select("user_id", "event_type").distinct().count()
 
 
-def test_stream_incremental_dedup_equals_batch_and_is_exactly_once(spark, sf_dir):
+def test_stream_incremental_dedup_equals_batch_and_is_exactly_once(
+    spark, sf_dir, tmp_path
+):
     """The streamed pairs table must equal the one-shot batch
     incremental dedup, and re-draining the same checkpoint must not
-    duplicate rows (exactly-once file processing)."""
-    import os
-    import uuid
-
+    duplicate rows (exactly-once file processing) — not even when the
+    last batch is replayed because its commit never landed."""
     from pyspark.sql import functions as F
 
     from movie_rankings_spark.catalog import load_table
@@ -172,13 +172,9 @@ def test_stream_incremental_dedup_equals_batch_and_is_exactly_once(spark, sf_dir
         DOCS_SCHEMA,
         stream_incremental_dedup,
     )
-    from movie_rankings_spark.streaming.events import _CHECKPOINT_ROOT
 
     src_dir, idx_dir = _stage_dedup_stream(spark, sf_dir)
-    run = os.path.join(
-        os.path.dirname(_CHECKPOINT_ROOT), "dedup_stream_t", uuid.uuid4().hex[:8]
-    )
-    out, ckpt = os.path.join(run, "pairs"), os.path.join(run, "ckpt")
+    out, ckpt = str(tmp_path / "pairs"), str(tmp_path / "ckpt")
 
     def drain():
         stream = (
@@ -186,12 +182,11 @@ def test_stream_incremental_dedup_equals_batch_and_is_exactly_once(spark, sf_dir
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        stream_incremental_dedup(stream, idx_dir, out, ckpt)
+        return stream_incremental_dedup(stream, idx_dir, out, ckpt)
 
-    drain()
+    first = drain().collect()
     streamed = {
-        (r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 12))
-        for r in spark.read.parquet(out).collect()
+        (r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 12)) for r in first
     }
     docs = load_table(spark, sf_dir, "documents")
     hb = F.substring(F.md5(F.col("doc_id").cast("string")), 30, 1)
@@ -202,34 +197,25 @@ def test_stream_incremental_dedup_equals_batch_and_is_exactly_once(spark, sf_dir
         ).collect()
     }
     assert streamed == batch_ans and len(streamed) > 0
-    n_before = spark.read.parquet(out).count()
-    drain()  # same checkpoint: no new files -> no new rows
-    assert spark.read.parquet(out).count() == n_before
+    assert drain().count() == len(first)  # same checkpoint: no new rows
+    _drop_last_commit(ckpt)
+    # the last batch runs again under its own batch_id
+    assert sorted(map(tuple, drain().collect())) == sorted(map(tuple, first))
 
 
-def test_stream_cms_cells_equal_batch_sketch(spark, sf_dir):
+def test_stream_cms_cells_equal_batch_sketch(spark, sf_dir, tmp_path):
     """After draining 3 micro-batches, the maintained cells table is
     bit-identical to the one-shot sketch; re-draining the checkpoint
     changes nothing."""
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
     from movie_rankings_spark.operators.cms import cms_build
-    from movie_rankings_spark.plans.streaming_queries import _stage_split_docs
+    from movie_rankings_spark.plans.streaming_queries import _stage_split
     from movie_rankings_spark.streaming.dedup_stream import DOCS_SCHEMA
-    from movie_rankings_spark.streaming.events import _CHECKPOINT_ROOT
-    from movie_rankings_spark.streaming.sketch_stream import (
-        current_cells,
-        stream_cms_maintenance,
-    )
+    from movie_rankings_spark.streaming.sketch_stream import stream_cms_maintenance
 
-    src = _stage_split_docs(spark, sf_dir, n=3)
-    run = os.path.join(
-        os.path.dirname(_CHECKPOINT_ROOT), "cms_stream_t", uuid.uuid4().hex[:8]
-    )
-    cells_dir, ckpt = os.path.join(run, "cells"), os.path.join(run, "ckpt")
+    src = _stage_split(spark, sf_dir, "documents", "doc_id", 3)
+    cells_dir, ckpt = str(tmp_path / "cells"), str(tmp_path / "ckpt")
 
     def drain():
         stream = (
@@ -237,13 +223,9 @@ def test_stream_cms_cells_equal_batch_sketch(spark, sf_dir):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        stream_cms_maintenance(stream, cells_dir, ckpt, depth=3, width=64)
+        return stream_cms_maintenance(stream, cells_dir, ckpt, depth=3, width=64)
 
-    drain()
-    maintained = {
-        (r["row"], r["bucket"]): r["n"]
-        for r in current_cells(spark, cells_dir).collect()
-    }
+    maintained = {(r["row"], r["bucket"]): r["n"] for r in drain().collect()}
     toks = (
         spark.read.parquet(src)
         .select(F.explode(F.split("text", " ")).alias("word"))
@@ -253,45 +235,31 @@ def test_stream_cms_cells_equal_batch_sketch(spark, sf_dir):
         for r in cms_build(toks, "word", 3, 64).collect()
     }
     assert maintained == batch and len(batch) > 0
-    drain()
-    again = {
-        (r["row"], r["bucket"]): r["n"]
-        for r in current_cells(spark, cells_dir).collect()
-    }
+    again = {(r["row"], r["bucket"]): r["n"] for r in drain().collect()}
     assert again == batch
 
 
-def test_stream_bitmaps_equal_batch_and_or_is_idempotent(spark, sf_dir):
+def test_stream_bitmaps_equal_batch_and_or_is_idempotent(spark, sf_dir, tmp_path):
     """Maintained daily bitmaps == batch-built bitmaps cell-for-cell;
     re-draining (idempotent OR) changes nothing."""
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
     from movie_rankings_spark.catalog import load_table
-    from movie_rankings_spark.plans.streaming_queries import _stage_split_events
+    from movie_rankings_spark.plans.streaming_queries import _stage_split
     from movie_rankings_spark.streaming import events as ev
-    from movie_rankings_spark.streaming.sketch_stream import (
-        current_cells,
-        stream_bitmap_maintenance,
-    )
+    from movie_rankings_spark.streaming.sketch_stream import stream_bitmap_maintenance
 
-    src = _stage_split_events(spark, sf_dir, n=4)
-    run = os.path.join(
-        os.path.dirname(ev._CHECKPOINT_ROOT), "bm_stream_t", uuid.uuid4().hex[:8]
-    )
-    bm_dir, ckpt = os.path.join(run, "bm"), os.path.join(run, "ckpt")
+    src = _stage_split(spark, sf_dir, "events", "event_id", 4)
+    bm_dir, ckpt = str(tmp_path / "bm"), str(tmp_path / "ckpt")
 
     def drain():
-        stream_bitmap_maintenance(
+        return stream_bitmap_maintenance(
             ev.read_events_stream(spark, src, maxFilesPerTrigger=1), bm_dir, ckpt
         )
 
-    drain()
     maintained = {
         (r["event_type"], str(r["day"]), r["buck"]): bytes(r["bm"])
-        for r in current_cells(spark, bm_dir).collect()
+        for r in drain().collect()
     }
     batch = {
         (r["event_type"], str(r["day"]), r["buck"]): bytes(r["bm"])
@@ -305,10 +273,9 @@ def test_stream_bitmaps_equal_batch_and_or_is_idempotent(spark, sf_dir):
         .collect()
     }
     assert maintained == batch and len(batch) > 0
-    drain()
     again = {
         (r["event_type"], str(r["day"]), r["buck"]): bytes(r["bm"])
-        for r in current_cells(spark, bm_dir).collect()
+        for r in drain().collect()
     }
     assert again == batch
 
@@ -401,10 +368,10 @@ def test_stream_restart_resumes_aggregation_state(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from movie_rankings_spark.plans.streaming_queries import _stage_split_events
+    from movie_rankings_spark.plans.streaming_queries import _stage_split
     from movie_rankings_spark.streaming.events import read_events_stream
 
-    staged = _stage_split_events(spark, sf_dir, n=4)
+    staged = _stage_split(spark, sf_dir, "events", "event_id", 4)
     parts = sorted(
         p.name for p in __import__("pathlib").Path(staged).glob("part-*")
     )
@@ -453,43 +420,34 @@ def test_stream_restart_resumes_aggregation_state(spark, sf_dir, tmp_path):
     assert 0 < partial_total < sum(full.values())
 
 
-def test_stream_histogram_cells_equal_batch_daily(spark, sf_dir):
+def test_stream_histogram_cells_equal_batch_daily(spark, sf_dir, tmp_path):
     """After draining 4 micro-batches, the maintained per-(type, day,
     bin) histogram cells are bit-identical to the one-shot batch daily
     build (cell addition is a commutative monoid); re-draining the
-    checkpoint changes nothing."""
-    import os
-    import uuid
-
+    checkpoint changes nothing, and neither does replaying the last
+    batch because its commit never landed."""
     from pyspark.sql import functions as F
 
-    from movie_rankings_spark.plans.streaming_queries import (
-        _stage_split_events,
-    )
+    from movie_rankings_spark.plans.streaming_queries import _stage_split
     from movie_rankings_spark.streaming import events as ev
-    from movie_rankings_spark.streaming.events import _CHECKPOINT_ROOT
     from movie_rankings_spark.streaming.sketch_stream import (
-        current_cells,
         stream_histogram_maintenance,
     )
 
-    src = _stage_split_events(spark, sf_dir, n=4)
-    run = os.path.join(
-        os.path.dirname(_CHECKPOINT_ROOT), "hist_stream_t", uuid.uuid4().hex[:8]
-    )
-    cells_dir, ckpt = os.path.join(run, "cells"), os.path.join(run, "ckpt")
+    src = _stage_split(spark, sf_dir, "events", "event_id", 4)
+    cells_dir, ckpt = str(tmp_path / "cells"), str(tmp_path / "ckpt")
 
     def drain():
         stream = ev.read_events_stream(spark, src, maxFilesPerTrigger=1)
-        stream_histogram_maintenance(
+        cells = stream_histogram_maintenance(
             stream, cells_dir, ckpt, lo=0.0, step=25.0, n_bins=20
         )
+        return {
+            (r["event_type"], str(r["day"]), r["bin"]): r["n"]
+            for r in cells.collect()
+        }
 
-    drain()
-    maintained = {
-        (r["event_type"], str(r["day"]), r["bin"]): r["n"]
-        for r in current_cells(spark, cells_dir).collect()
-    }
+    maintained = drain()
     e = spark.read.parquet(src)
     v = F.col("value")
     bin_ = F.least(
@@ -503,9 +461,60 @@ def test_stream_histogram_cells_equal_batch_daily(spark, sf_dir):
         .collect()
     }
     assert maintained == batch and len(batch) > 0
-    drain()
-    again = {
-        (r["event_type"], str(r["day"]), r["bin"]): r["n"]
-        for r in current_cells(spark, cells_dir).collect()
-    }
-    assert again == batch
+    assert drain() == batch
+    _drop_last_commit(ckpt)
+    assert drain() == batch  # the last batch runs again under its own batch_id
+
+
+def _drop_last_commit(ckpt):
+    """Make the checkpoint look as if the job died after the last
+    batch's write but before Spark committed it."""
+    commits = os.path.join(ckpt, "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    for name in (last, f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+
+
+def test_split_stage_follows_its_source(spark, sf_dir, tmp_path, monkeypatch):
+    """A staged landing zone belongs to one source file: two datasets
+    that share the directory name sf0.001 but not their events stage
+    separately, and rewriting a dataset's events in place restages it,
+    so a split-staged stream query answers for the events it was given."""
+    import shutil
+
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from movie_rankings_spark.catalog import table_path
+    from movie_rankings_spark.plans.streaming_queries import (
+        _HIST_STREAM_ORACLE,
+        stream_histogram_rollup,
+    )
+    from movie_rankings_spark.streaming import ingest
+
+    monkeypatch.setattr(ingest, "_STAGE_ROOT", str(tmp_path / "stages"), raising=False)
+    events = pq.read_table(table_path(sf_dir, "events"))
+    even = events.filter(pc.equal(pc.bit_wise_and(events["event_id"], 1), 0))
+    ds_a, ds_b = tmp_path / "dsA" / "sf0.001", tmp_path / "dsB" / "sf0.001"
+    ds_a.mkdir(parents=True)
+    ds_b.mkdir(parents=True)
+    shutil.copyfile(table_path(sf_dir, "events"), table_path(str(ds_a), "events"))
+    pq.write_table(even, table_path(str(ds_b), "events"))
+
+    def check(ds):
+        got = sorted(map(tuple, stream_histogram_rollup(spark, str(ds)).collect()))
+        with duckdb.connect() as con:
+            con.execute(
+                "CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{table_path(str(ds), 'events')}')"
+            )
+            assert got == sorted(con.execute(_HIST_STREAM_ORACLE).fetchall())
+        return sum(r[2] for r in got)
+
+    n_all = check(ds_a)
+    n_even = check(ds_b)
+    assert 0 < n_even < n_all
+    pq.write_table(even, table_path(str(ds_a), "events"))  # rewritten in place
+    assert check(ds_a) == n_even

@@ -4,7 +4,7 @@ import datetime
 import os
 
 from movie_rankings_spark.operators.changelog import latest_snapshot
-from movie_rankings_spark.streaming.upsert import current_snapshot, stream_upsert
+from movie_rankings_spark.streaming.upsert import stream_upsert
 
 _SCHEMA = "key long, ts timestamp, seq long, val string"
 _KW = dict(keys=["key"], version_cols=["ts", "seq"], payload_cols=["val"])
@@ -26,13 +26,12 @@ def _run(spark, landing, run_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
-    stream_upsert(
+    return stream_upsert(
         stream,
         table_dir=os.path.join(run_dir, "table"),
         checkpoint_dir=os.path.join(run_dir, "ckpt"),
         **_KW,
     )
-    return current_snapshot(spark, os.path.join(run_dir, "table"))
 
 
 def _as_dict(df):

@@ -2,7 +2,10 @@
 
 Runs every ``__spark_entry__.queries()`` entry at a scale factor and
 compares it against the matching ``oracle_sql()`` in DuckDB:
-row count, column names, and order-insensitive value equality.
+row count, column names, and order-insensitive value equality. Each
+query gets one status with its reason and seconds: ``pass``, ``wrong``
+(the answers differ), ``error`` (Spark or DuckDB raised) or
+``rows-only`` (no oracle).
 
 Usage:  python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -10,16 +13,25 @@ Usage:  python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
+import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from movie_rankings_spark.catalog import TABLES, table_path  # noqa: E402
+from movie_rankings_spark.scratch import scratch_dir  # noqa: E402
 from movie_rankings_spark.session import get_spark  # noqa: E402
+
+#: DuckDB's own default is 80% of RAM, which starves the Spark JVM
+#: beside it; past the limit an oracle spills to scratch, and past
+#: the spill cap it fails and is reported as an ``error``
+DUCKDB_CONFIG = {"memory_limit": "4GB", "max_temp_directory_size": "8GB"}
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -66,13 +78,33 @@ def compare(spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[str]:
     return problems
 
 
+def _check(spark, con, sf_dir: str, fn, oracle: str | None) -> tuple[str, str]:
+    """(status, reason) of one query against its oracle."""
+    try:
+        sdf = fn(spark, sf_dir).toPandas()
+    except Exception as e:  # noqa: BLE001
+        return "error", f"spark error: {e}"
+    if oracle is None:
+        return "rows-only", f"rows={len(sdf)} (no oracle)"
+    try:
+        ddf = con.execute(oracle).df()
+    except Exception as e:  # noqa: BLE001
+        return "error", f"duckdb error: {e}"
+    problems = compare(sdf, ddf)
+    if problems:
+        return "wrong", "; ".join(problems)
+    return "pass", f"rows={len(sdf)}"
+
+
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     only = [a for a in args if "/" not in a]
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
+    con = duckdb.connect(
+        config={**DUCKDB_CONFIG, "temp_directory": scratch_dir("duckdb")}
+    )
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
@@ -80,44 +112,38 @@ def main() -> int:
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    failures = 0
     statuses: dict[str, str] = {}
+    reasons: dict[str, str] = {}
+    seconds: dict[str, float] = {}
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {e}")
-            statuses[name] = "FAIL"
-            failures += 1
-            continue
-        if name not in oracles:
-            print(f"ok?   {name}: rows={len(sdf)} (no oracle — rows-only check)")
-            statuses[name] = "rows-only"
-            continue
-        try:
-            ddf = con.execute(oracles[name]).df()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {e}")
-            statuses[name] = "FAIL"
-            failures += 1
-            continue
-        problems = compare(sdf, ddf)
-        if problems:
-            failures += 1
-            statuses[name] = "FAIL"
-            print(f"FAIL  {name}: " + "; ".join(problems))
-        else:
-            statuses[name] = "oracle-pass"
-            print(f"PASS  {name}: rows={len(sdf)}")
-    print(f"\n{failures} failures / {len(queries)} queries")
+        t0 = time.perf_counter()
+        statuses[name], reasons[name] = _check(
+            spark, con, sf_dir, fn, oracles.get(name)
+        )
+        seconds[name] = round(time.perf_counter() - t0, 3)
+        print(
+            f"{statuses[name].upper():9s} {name}: {reasons[name]} "
+            f"({seconds[name]:.1f} s)"
+        )
+    found = list(statuses.values())
+    counts = {k: found.count(k) for k in ("pass", "wrong", "error", "rows-only")}
+    failures = counts["wrong"] + counts["error"]
+    print(f"\n{failures} failures / {len(found)} queries: {counts}")
     if not only:  # full runs refresh the local-status snapshot
         import json
 
-        with open("/root/repo/ORACLE_LOCAL.json", "w") as fh:
+        with open(os.path.join(_REPO, "ORACLE_LOCAL.json"), "w") as fh:
             json.dump(
-                {"sf_dir": sf_dir, "statuses": statuses}, fh, indent=1,
+                {
+                    "sf_dir": sf_dir,
+                    "statuses": statuses,
+                    "reasons": reasons,
+                    "seconds": seconds,
+                },
+                fh,
+                indent=1,
                 sort_keys=True,
             )
     return 1 if failures else 0

@@ -8,7 +8,7 @@ that distinction should be stated, not inferred. This tool joins:
 - the registry (`all_queries.QUERIES`),
 - every `CORRECTNESS_r*.json` (driver samples, by round),
 - `ORACLE_LOCAL.json` (written by each FULL `tools/check_oracle.py`
-  run: oracle-pass / rows-only / FAIL per query),
+  run: pass / wrong / error / rows-only per query),
 
 and rewrites the `## Driver-sample coverage` section of COVERAGE.md.
 

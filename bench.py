@@ -1,10 +1,21 @@
-"""Benchmark harness (driver contract).
+"""Benchmark harness and per-query profiler.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric", "value" (total sec), "unit", "queries" {name: sec},
-"sf"}. Timing is wall-clock around the collecting action after a
-session warm-up action.
+    python bench.py [query ...]
+
+Runs the named registered queries (all of them by default) at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test tables) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric", "value"
+(total sec), "unit", "queries" {name: sec}, "sf"}. Timing is wall-clock
+around building and collecting each query, best of N, after a session
+warm-up.
+
+Every run also writes a Spark event log into a temporary directory,
+tags the build and the collect of each timed run with job groups
+``b|<rep>|<name>`` and ``c|<rep>|<name>``, and after the sweep breaks
+each query's fastest run down by layer (see ``breakdown``) with
+perfbench's event-log parser. A run over all queries writes timings,
+breakdown and suite totals to the round-stamped BENCH_FULL_* file; a run
+over named queries writes only to $SPARK_GRAFT_BENCH_OUT, if set.
 """
 
 from __future__ import annotations
@@ -12,13 +23,17 @@ from __future__ import annotations
 import gc
 import json
 import os
+import shlex
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from movie_rankings_spark.plans import all_queries  # noqa: E402
 from movie_rankings_spark.session import get_spark  # noqa: E402
+from perfbench.eventlog import summarize  # noqa: E402
+from perfbench.probes import drift, session_snapshot  # noqa: E402
 
 #: Representative slice of every tier: flagship, relational joins and
 #: aggregates, windows, JSON, dedup (exact + LSH + inverted-index),
@@ -493,7 +508,248 @@ def _baseline_seconds() -> dict[str, float]:
     return out
 
 
-def main() -> int:
+def _log_events_to(log_dir: str) -> None:
+    """Make the session started next write an uncompressed event log
+    into ``log_dir``: spark-submit ``--conf`` entries, set before the
+    gateway starts."""
+    conf = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": "file://" + log_dir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    args = " ".join(f"--conf {shlex.quote(f'{k}={v}')}" for k, v in conf.items())
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f"{args} {os.environ.get('PYSPARK_SUBMIT_ARGS', 'pyspark-shell')}"
+    )
+
+
+def split_log(lines, owner) -> dict[str, list[str]]:
+    """Route each event-log line to the query that owns it, in one pass.
+
+    ``owner(job_group)`` names the query whose jobs run under that group,
+    or None. A job goes by its group; a stage and its tasks go with the
+    job that first lists the stage; a SQL execution's events go with its
+    first job (its start event comes first, so it waits until then)."""
+    buckets: dict[str, list[str]] = {}
+    stage_of: dict[int, str | None] = {}
+    execution_of: dict[int, str | None] = {}
+    pending: dict[int, list[str]] = {}
+    for line in lines:
+        ev = json.loads(line)
+        kind = ev.get("Event", "")
+        if kind == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            query = owner(props.get("spark.jobGroup.id") or "")
+            for stage in ev.get("Stage IDs", ()):
+                stage_of.setdefault(stage, query)
+            if "spark.sql.execution.id" in props:
+                eid = int(props["spark.sql.execution.id"])
+                execution_of.setdefault(eid, query)
+                held = pending.pop(eid, [])
+                if query is not None:
+                    buckets.setdefault(query, []).extend(held)
+        elif kind == "SparkListenerStageCompleted":
+            query = stage_of.get((ev.get("Stage Info") or {}).get("Stage ID"))
+        elif kind == "SparkListenerTaskEnd":
+            query = stage_of.get(ev.get("Stage ID"))
+        elif "executionId" in ev:
+            eid = ev["executionId"]
+            if eid not in execution_of:
+                if kind.endswith("SQLExecutionEnd"):
+                    pending.pop(eid, None)  # ran no job
+                else:
+                    pending.setdefault(eid, []).append(line)
+                continue
+            query = execution_of[eid]
+        else:
+            continue
+        if query is not None:
+            buckets.setdefault(query, []).append(line)
+    return buckets
+
+
+def summarize_queries(
+    lines, best_rep: dict[str, str], stream_runs: dict[str, str]
+) -> dict[str, dict[str, float]]:
+    """perfbench's event-log totals per query, over the jobs of run
+    ``best_rep[name]`` (groups ``b|<rep>|<name>``, ``c|<rep>|<name>``)
+    plus those of the streams ``stream_runs`` maps to it by run id."""
+
+    def owner(group: str) -> str | None:
+        if group in stream_runs:
+            return stream_runs[group]
+        phase, _, rest = group.partition("|")
+        rep, _, name = rest.partition("|")
+        return name if phase in ("b", "c") and best_rep.get(name) == rep else None
+
+    buckets = split_log(lines, owner)
+    return {
+        name: summarize(buckets.pop(name, ()), lambda group: True)
+        for name in best_rep
+    }
+
+
+def breakdown(
+    ev: dict[str, float],
+    build_s: float,
+    collect_s: float,
+    catalyst_ms: float,
+    session_drift: tuple[int, int, int],
+    cores: int,
+) -> dict[str, float]:
+    """One query's layer breakdown from the event-log totals ``ev`` of
+    its fastest run: build/collect seconds and Spark jobs (``jobs`` adds
+    the micro-batch jobs of the streams it ran), stages, tasks, executor
+    run and CPU seconds, ``idle_s`` = wall - executor run seconds /
+    cores, shuffle and spill MB, Python-worker seconds, Catalyst
+    analysis + optimization + planning ms, and the session drift: new
+    temp views, changed conf keys and new persisted RDDs."""
+    mb = 1e6
+    new_views, conf_drift, new_rdds = session_drift
+    return {
+        "build_s": round(build_s, 4),
+        "collect_s": round(collect_s, 4),
+        "build_jobs": ev.get("jobs.b", 0),
+        "collect_jobs": ev.get("jobs.c", 0),
+        "jobs": ev.get("jobs", 0),
+        "stages": ev.get("stages", 0),
+        "tasks": ev.get("tasks", 0),
+        "executor_run_s": round(ev.get("executor_run_s", 0.0), 3),
+        "executor_cpu_s": round(ev.get("executor_cpu_s", 0.0), 3),
+        "idle_s": round(
+            build_s + collect_s - ev.get("executor_run_s", 0.0) / cores, 4
+        ),
+        "shuffle_read_mb": round(ev.get("shuffle_read_bytes", 0) / mb, 3),
+        "shuffle_write_mb": round(ev.get("shuffle_write_bytes", 0) / mb, 3),
+        "spill_mb": round(ev.get("spill_bytes", 0) / mb, 3),
+        "python_s": round(ev.get("python_run_s", 0.0), 3),
+        "catalyst_ms": round(catalyst_ms, 1),
+        "new_views": new_views,
+        "conf_drift": conf_drift,
+        "new_rdds": new_rdds,
+    }
+
+
+def suite_totals(queries: dict[str, dict[str, float]]) -> dict[str, float]:
+    """The suite line: Σ build seconds, Σ jobs, Σ executor CPU seconds
+    and Σ idle wall seconds over the per-query breakdowns."""
+    return {
+        key: round(sum(q[key] for q in queries.values()), 3)
+        for key in ("build_s", "jobs", "executor_cpu_s", "idle_s")
+    }
+
+
+def _time_queries(spark, names, sf_dir, sf, capture):
+    """Best-of-N wall seconds of each query, and per query the build
+    seconds, collect seconds, Catalyst ms and started stream ids of
+    every timed run plus the session drift over all of its runs."""
+    from movie_rankings_spark import release_persisted
+    from perfbench.run import _catalyst_ms
+
+    sc = spark.sparkContext
+    baseline = _baseline_seconds()
+    timings: dict[str, float] = {}
+    runs: dict[str, list[tuple[float, float, float, list[str]]]] = {}
+    drifts: dict[str, tuple[int, int, int]] = {}
+    for name in names:
+        fn = all_queries.QUERIES[name]
+        before = session_snapshot(spark)
+        runs[name] = reps = []
+        best, n = float("inf"), 0
+        # best-of-N: min estimates the noise floor. Two runs normally;
+        # when the min still sits >1.3x the recorded BASELINE.md anchor
+        # the discrepancy is as likely a GC pause / scheduler hiccup as
+        # a real regression, so up to 3 extra repeats refine the min —
+        # a genuine regression stays slow through all of them.
+        max_runs = 2
+        # anchors are sf0.1 measurements — meaningless at other scales
+        anchor = baseline.get(name) if sf == 0.1 else None
+        while len(reps) < max_runs:
+            started = len(capture.started)
+            sc.setJobGroup(f"b|{len(reps)}|{name}", name)
+            start = time.perf_counter()
+            df = fn(spark, sf_dir)
+            built = time.perf_counter()
+            sc.setJobGroup(f"c|{len(reps)}|{name}", name)
+            n = len(df.collect())  # full materialization — count() would
+            # let Catalyst prune aggregate expressions and under-measure
+            end = time.perf_counter()
+            sc.setJobGroup("bench", "between runs")
+            reps.append(
+                (built - start, end - built, _catalyst_ms(df), capture.started[started:])
+            )
+            best = min(best, end - start)
+            if (
+                len(reps) == max_runs
+                and max_runs < 5
+                and anchor is not None
+                and best > 1.3 * anchor
+            ):
+                max_runs += 1
+        timings[name] = round(best, 4)
+        print(f"# {name}: {best:.3f}s rows={n} runs={len(reps)}", file=sys.stderr)
+        # cache hygiene between queries: operators persist reused
+        # intermediates that the returned DataFrame still references,
+        # so over a 300+-query suite they would accumulate into executor
+        # memory pressure that inflates LATE queries' timings (r4
+        # finding: late-suite graph queries measured 4-6x their
+        # isolated cost). Releasing them between queries measures each
+        # query's own cost — within-query reuse still benefits.
+        release_persisted()
+        gc.collect()  # release py-side refs so ContextCleaner reaps
+        # checkpointed RDDs from the iterative operators
+        drifts[name] = drift(before, session_snapshot(spark))
+    return timings, runs, drifts
+
+
+def _profile(spark, capture, log_dir, runs, drifts) -> dict[str, dict[str, float]]:
+    """Stop the session, then break each query's fastest run down by
+    layer from the event log it wrote."""
+    deadline = time.time() + 30
+    while len(capture.terminated) < len(capture.started) and time.time() < deadline:
+        time.sleep(0.05)
+    best_rep: dict[str, str] = {}
+    owner_of_stream: dict[str, str] = {}
+    for name, reps in runs.items():
+        rep = min(range(len(reps)), key=lambda i: reps[i][0] + reps[i][1])
+        best_rep[name] = str(rep)
+        owner_of_stream.update(dict.fromkeys(reps[rep][3], name))
+    stream_runs: dict[str, str] = {}
+    batches: dict[str, list[float]] = {}
+    for rec in capture.records():
+        if (name := owner_of_stream.get(rec["query_id"])) is not None:
+            stream_runs[rec["run_id"]] = name
+            batches.setdefault(name, []).append(rec["batch_duration_ms"] / 1e3)
+    cores = spark.sparkContext.defaultParallelism
+    spark.stop()
+    [log] = os.listdir(log_dir)
+    with open(os.path.join(log_dir, log), encoding="utf-8") as fh:
+        totals = summarize_queries(fh, best_rep, stream_runs)
+    out: dict[str, dict[str, float]] = {}
+    for name, ev in totals.items():
+        build_s, collect_s, catalyst_ms, _ = runs[name][int(best_rep[name])]
+        out[name] = breakdown(ev, build_s, collect_s, catalyst_ms, drifts[name], cores)
+        if name in batches:
+            out[name]["batches"] = len(batches[name])
+            out[name]["batch_s"] = round(sum(batches[name]), 3)
+        print(f"# {name} {json.dumps(out[name], separators=(',', ':'))}", file=sys.stderr)
+    return out
+
+
+def main(argv: list[str] | None = None) -> int:
+    names = list(sys.argv[1:] if argv is None else argv)
+    unknown = [n for n in names if n not in all_queries.QUERIES]
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+    subset = bool(names)
+    names = names or list(HEADLINE_QUERIES)
+    with tempfile.TemporaryDirectory(prefix="bench-eventlog-") as log_dir:
+        return _bench(names, subset, log_dir)
+
+
+def _bench(names: list[str], subset: bool, log_dir: str) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
     m = __import__("re").search(r"sf([0-9.]+)$", sf_tag)
@@ -508,7 +764,12 @@ def main() -> int:
     except OSError:
         load_start = None
 
+    _log_events_to(log_dir)
     spark = get_spark("movie-rankings-bench")
+    from movie_rankings_spark.streaming.observability import ProgressCapture
+
+    capture = ProgressCapture()
+    spark.streams.addListener(capture)
     # Warm-up (steady-state methodology, recorded in BASELINE.md):
     # parquet footer/file-index caches for the measured tables, the
     # Python/Arrow worker pool, and whole-stage-codegen JIT — each query
@@ -525,52 +786,16 @@ def main() -> int:
     spark.range(1000).mapInPandas(lambda it: it, "id long").count()
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and os.path.normpath(sf_dir) != warm_dir:
-        for name in HEADLINE_QUERIES:
+        for name in names:
             all_queries.QUERIES[name](spark, warm_dir).collect()
 
     calib = calibration_seconds(spark, sf_dir)
     print(f"# calibration: {calib:.3f}s", file=sys.stderr)
 
-    baseline = _baseline_seconds()
-    timings: dict[str, float] = {}
-    for name in HEADLINE_QUERIES:
-        fn = all_queries.QUERIES[name]
-        best, n = float("inf"), 0
-        # best-of-N: min estimates the noise floor. Two runs normally;
-        # when the min still sits >1.3x the recorded BASELINE.md anchor
-        # the discrepancy is as likely a GC pause / scheduler hiccup as
-        # a real regression, so up to 3 extra repeats refine the min —
-        # a genuine regression stays slow through all of them.
-        runs, max_runs = 0, 2
-        # anchors are sf0.1 measurements — meaningless at other scales
-        anchor = baseline.get(name) if sf == 0.1 else None
-        while runs < max_runs:
-            start = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = len(df.collect())  # full materialization — count() would
-            # let Catalyst prune aggregate expressions and under-measure
-            best = min(best, time.perf_counter() - start)
-            runs += 1
-            if (
-                runs == max_runs
-                and max_runs < 5
-                and anchor is not None
-                and best > 1.3 * anchor
-            ):
-                max_runs += 1
-        timings[name] = round(best, 4)
-        print(f"# {name}: {best:.3f}s rows={n} runs={runs}", file=sys.stderr)
-        # cache hygiene between queries: operators persist reused
-        # intermediates and never unpersist (the returned DataFrame
-        # still references them), so over a 200+-query suite leaked
-        # cache entries + checkpointed RDDs accumulate into executor
-        # memory pressure that inflates LATE queries' timings (r4
-        # finding: late-suite graph queries measured 4-6x their
-        # isolated cost). Clearing between queries measures each
-        # query's own cost — within-query reuse still benefits.
-        spark.catalog.clearCache()
-        gc.collect()  # release py-side refs so ContextCleaner reaps
-        # checkpointed RDDs from the iterative operators
+    timings, runs, drifts = _time_queries(spark, names, sf_dir, sf, capture)
+    per_query = _profile(spark, capture, log_dir, runs, drifts)
+    suite = suite_totals(per_query)
+    print(f"# suite {json.dumps(suite, separators=(',', ':'))}", file=sys.stderr)
 
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     anchor = _calibration_anchor(repo_dir)
@@ -610,6 +835,8 @@ def main() -> int:
         # re-anchor calibration or per-query anchors from a run whose
         # anchor_eligible is true — quiet pre-run box, in-band calib.
         "anchor_eligible": not loaded and not busy_start,
+        "suite": suite,
+        "breakdown": per_query,
     }
     if loaded:
         why = (
@@ -624,13 +851,13 @@ def main() -> int:
             "sweep (not anchor-eligible)",
             file=sys.stderr,
         )
-    full_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT",
-        _default_bench_out(repo_dir, sf_tag, loaded=loaded),
+    full_path = os.environ.get("SPARK_GRAFT_BENCH_OUT") or (
+        None if subset else _default_bench_out(repo_dir, sf_tag, loaded=loaded)
     )
     try:
-        with open(full_path, "w", encoding="utf-8") as fh:
-            json.dump(full, fh, indent=1)
+        if full_path is not None:
+            with open(full_path, "w", encoding="utf-8") as fh:
+                json.dump(full, fh, indent=1)
     except OSError:
         pass  # read-only checkout — stderr already has every timing
     print(compact_payload(timings, sf, calib))

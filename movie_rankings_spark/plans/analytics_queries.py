@@ -1401,6 +1401,9 @@ def benford_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Spearman rank correlation: quantity vs price ----------------------------
 
+#: the three integer moments pass 2^64 at sf0.1, where DuckDB's
+#: HUGEINT->DOUBLE cast is not correctly rounded (off by 1 ulp); the
+#: cast through VARCHAR is, and matches Spark's exact decimals
 _SPEARMAN_ORACLE = """
 WITH pc AS (
   SELECT CAST(l_quantity AS BIGINT) AS va,
@@ -1426,15 +1429,15 @@ WITH pc AS (
   FROM j
 )
 SELECT n AS n_rows,
-       CAST(CAST(n AS HUGEINT) * sab
+       CAST(CAST(CAST(n AS HUGEINT) * sab
             - (CAST(n AS HUGEINT) * (n + 1)) * (CAST(n AS HUGEINT) * (n + 1))
-            AS DOUBLE)
-       / (sqrt(CAST(CAST(n AS HUGEINT) * saa
+            AS VARCHAR) AS DOUBLE)
+       / (sqrt(CAST(CAST(CAST(n AS HUGEINT) * saa
             - (CAST(n AS HUGEINT) * (n + 1)) * (CAST(n AS HUGEINT) * (n + 1))
-            AS DOUBLE))
-        * sqrt(CAST(CAST(n AS HUGEINT) * sbb
+            AS VARCHAR) AS DOUBLE))
+        * sqrt(CAST(CAST(CAST(n AS HUGEINT) * sbb
             - (CAST(n AS HUGEINT) * (n + 1)) * (CAST(n AS HUGEINT) * (n + 1))
-            AS DOUBLE))) AS rho
+            AS VARCHAR) AS DOUBLE))) AS rho
 FROM m
 """
 

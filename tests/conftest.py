@@ -22,3 +22,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def built_query(spark, sf_dir):
+    """Each registered query built once per session at ``sf_dir``:
+    name -> (output schema, simple physical plan; None for ``stream_*``
+    queries, whose build runs a whole stream). The registry-wide
+    compile, plan and schema lints share it, so Tier-1 builds each
+    query once for all of them."""
+    from movie_rankings_spark.plans.all_queries import QUERIES
+
+    memo = {}
+
+    def build(name: str):
+        if name not in memo:
+            df = QUERIES[name](spark, sf_dir)
+            plan = None
+            if not name.startswith("stream_"):
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "simple"
+                )
+            memo[name] = (df.schema, plan)
+        return memo[name]
+
+    return build

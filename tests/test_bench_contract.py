@@ -11,9 +11,26 @@ suite grows to, and pin the correctness-harness ordering contract
 from __future__ import annotations
 
 import json
+import os
+import shlex
+
+import pytest
 
 import bench
 from movie_rankings_spark.plans import all_queries
+from perfbench import eventlog
+
+#: event log of an sf0.001 run, recorded under the same job groups
+#: bench.py uses (see perfbench/test_eventlog.py): q6 with tags ``w``
+#: and ``t``, the numpy similarity query and one stream with tag ``t``
+LOG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "perfbench",
+    "testdata",
+    "eventlog_sf0.001.jsonl",
+)
+STREAM_RUN = "48b23e17-2466-4a87-a999-80bfa33ca593"
+TRACED = ("q6_forecast_revenue", "similarity_cosine_topk_numpy", "stream_tumbling_daily")
 
 
 def _fake_timings() -> dict[str, float]:
@@ -106,3 +123,78 @@ def test_loaded_run_quarantined_by_name(tmp_path):
     assert quiet.endswith("BENCH_FULL_r04_sf0.1.json")
     assert loaded.endswith("BENCH_FULL_r04_sf0.1_LOADED.json")
     assert bench.CALIBRATION_LOAD_BAND == 1.2
+
+
+def _summaries(best_rep, stream_runs):
+    with open(LOG, encoding="utf-8") as fh:
+        return bench.summarize_queries(fh, best_rep, stream_runs)
+
+
+def test_summarizer_splits_the_log_by_query():
+    got = _summaries(dict.fromkeys(TRACED, "t"), {STREAM_RUN: "stream_tumbling_daily"})
+    # (build, collect, all) jobs per query, as statusTracker counted
+    # them at recording; the stream's micro-batch job runs under its run id
+    assert {n: (ev.get("jobs.b", 0), ev.get("jobs.c", 0), ev["jobs"]) for n, ev in got.items()} == {
+        "q6_forecast_revenue": (1, 2, 3),
+        "similarity_cosine_topk_numpy": (2, 5, 7),
+        "stream_tumbling_daily": (1, 3, 5),
+    }
+    assert got["similarity_cosine_topk_numpy"]["python_run_s"] == pytest.approx(1.929)
+    # the split loses and double-counts nothing: it adds up to one
+    # summarize() over the same jobs
+    whole = eventlog.summarize_file(
+        LOG, lambda group: group.startswith(("b|t|", "c|t|")) or group == STREAM_RUN
+    )
+    for key, value in whole.items():
+        assert sum(ev.get(key, 0) for ev in got.values()) == pytest.approx(value), key
+
+
+def test_summarizer_keeps_only_the_chosen_run():
+    tagged_w = _summaries({"q6_forecast_revenue": "w"}, {})["q6_forecast_revenue"]
+    tagged_t = _summaries({"q6_forecast_revenue": "t"}, {})["q6_forecast_revenue"]
+    assert (tagged_w["jobs.b"], tagged_w["jobs.c"]) == (1, 2)
+    assert tagged_w["executor_run_s"] != tagged_t["executor_run_s"]
+    # a query that ran no job under the chosen tag summarizes to nothing
+    assert not any(_summaries({"q6_forecast_revenue": "9"}, {})["q6_forecast_revenue"].values())
+
+
+def test_breakdown_fields_and_suite_line():
+    got = _summaries(dict.fromkeys(TRACED, "t"), {STREAM_RUN: "stream_tumbling_daily"})
+    rows = {
+        name: bench.breakdown(ev, 0.5, 1.5, 20.0, (0, 1, 2), cores=2)
+        for name, ev in got.items()
+    }
+    q6 = rows["q6_forecast_revenue"]
+    assert set(q6) == {
+        "build_s", "collect_s", "build_jobs", "collect_jobs", "jobs", "stages",
+        "tasks", "executor_run_s", "executor_cpu_s", "idle_s", "shuffle_read_mb",
+        "shuffle_write_mb", "spill_mb", "python_s", "catalyst_ms", "new_views",
+        "conf_drift", "new_rdds",
+    }
+    assert (q6["build_jobs"], q6["collect_jobs"], q6["jobs"]) == (1, 2, 3)
+    assert (q6["new_views"], q6["conf_drift"], q6["new_rdds"]) == (0, 1, 2)
+    assert q6["idle_s"] == pytest.approx(2.0 - 0.027 / 2)
+    assert rows["similarity_cosine_topk_numpy"]["python_s"] == pytest.approx(1.929)
+    assert rows["stream_tumbling_daily"]["shuffle_read_mb"] == pytest.approx(0.015, abs=1e-3)
+    suite = bench.suite_totals(rows)
+    assert set(suite) == {"build_s", "jobs", "executor_cpu_s", "idle_s"}
+    assert suite["jobs"] == 15
+    assert suite["build_s"] == pytest.approx(1.5)
+    assert suite["executor_cpu_s"] == pytest.approx(1.557, abs=1e-3)
+    assert suite["idle_s"] == pytest.approx(sum(r["idle_s"] for r in rows.values()))
+
+
+def test_event_log_confs_go_before_the_submit_args(monkeypatch, tmp_path):
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--driver-java-options -Dx=1 pyspark-shell")
+    bench._log_events_to(str(tmp_path))
+    args = shlex.split(os.environ["PYSPARK_SUBMIT_ARGS"])
+    assert args[-3:] == ["--driver-java-options", "-Dx=1", "pyspark-shell"]
+    confs = dict(a.split("=", 1) for a in args[1:-3:2])
+    assert confs["spark.eventLog.enabled"] == "true"
+    assert confs["spark.eventLog.dir"] == "file://" + str(tmp_path)
+    assert confs["spark.eventLog.compress"] == "false"
+
+
+def test_unknown_query_names_are_refused(capsys):
+    assert bench.main(["q6_forecast_revenue", "no_such_query"]) == 2
+    assert "no_such_query" in capsys.readouterr().err

@@ -83,10 +83,11 @@ def test_window_events_single_shuffle(spark, sf_dir):
 
 
 @pytest.mark.parametrize("name", sorted(all_queries.QUERIES))
-def test_every_query_compiles(spark, sf_dir, name):
-    """Analysis succeeds (schema resolvable) without executing."""
-    df = all_queries.QUERIES[name](spark, sf_dir)
-    assert df.schema is not None
+def test_every_query_compiles(built_query, name):
+    """Analysis (and, for batch queries, planning) succeeds without
+    executing the result."""
+    schema, _ = built_query(name)
+    assert schema is not None
 
 
 def test_q6_filters_pushed_to_scan(spark, sf_dir):
@@ -337,10 +338,11 @@ _PY_NODE = re.compile(r"InPandas|EvalPython|PythonUDF|BatchEvalPython", re.I)
     "name",
     sorted(n for n in all_queries.QUERIES if not n.startswith("stream_")),
 )
-def test_python_stages_only_where_declared(spark, sf_dir, name):
+def test_python_stages_only_where_declared(built_query, name):
     """Catching accidental UDF creep: a Python node appearing in any
     other query is a performance regression, not a style issue."""
-    has_py = bool(_PY_NODE.search(_plan(spark, sf_dir, name)))
+    _, plan = built_query(name)
+    has_py = bool(_PY_NODE.search(plan))
     assert has_py == (name in _PYTHON_RESIDENT), name
 
 

@@ -11,12 +11,13 @@ every ``queries()`` entry must produce only flat scalar columns.
 For most queries, building the DataFrame is enough — Spark resolves
 the schema at plan time, so nothing executes except the handful of
 bounded collects some operators perform during plan construction.
-Two groups are NOT build-is-free and are linted in their own slower
-tests: streaming queries run a real micro-batch engine when *called*,
-and the warehouse sink/ingest ROUND-TRIP queries execute full
+Two groups are NOT build-is-free and are linted in their own tests:
+streaming queries run a real micro-batch engine when *called*, and
+the warehouse sink/ingest ROUND-TRIP queries execute full
 write(+streaming) jobs at plan-build time before returning the
-audit-readback plan (r9 ADVICE — the fast batch lint must not imply
-those builds are free).
+audit-readback plan (r9 ADVICE — the batch lint must not imply those
+builds are free). Every lint reads the schema from the session's one
+build of each query (the ``built_query`` fixture in conftest.py).
 """
 
 from __future__ import annotations
@@ -48,18 +49,17 @@ _BATCH = tuple(
 )
 
 
-def _nested_columns(df) -> list[str]:
+def _nested_columns(schema) -> list[str]:
     return [
         f.name
-        for f in df.schema.fields
+        for f in schema.fields
         if isinstance(f.dataType, (ArrayType, MapType, StructType))
     ]
 
 
 @pytest.mark.parametrize("name", _BATCH)
-def test_batch_query_output_is_flat(name, spark, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
-    nested = _nested_columns(df)
+def test_batch_query_output_is_flat(name, built_query):
+    nested = _nested_columns(built_query(name)[0])
     assert not nested, (
         f"query {name!r} returns non-scalar top-level columns {nested}; "
         "the driver's pandas canonicalizer cannot sort/hash them — "
@@ -68,9 +68,8 @@ def test_batch_query_output_is_flat(name, spark, sf_dir):
 
 
 @pytest.mark.parametrize("name", _STREAMING)
-def test_streaming_query_output_is_flat(name, spark, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
-    nested = _nested_columns(df)
+def test_streaming_query_output_is_flat(name, built_query):
+    nested = _nested_columns(built_query(name)[0])
     assert not nested, (
         f"streaming query {name!r} returns non-scalar top-level "
         f"columns {nested}; the driver's canonicalizer cannot hash them"
@@ -78,9 +77,8 @@ def test_streaming_query_output_is_flat(name, spark, sf_dir):
 
 
 @pytest.mark.parametrize("name", _SIDE_EFFECTING)
-def test_roundtrip_query_output_is_flat(name, spark, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
-    nested = _nested_columns(df)
+def test_roundtrip_query_output_is_flat(name, built_query):
+    nested = _nested_columns(built_query(name)[0])
     assert not nested, (
         f"round-trip query {name!r} returns non-scalar top-level "
         f"columns {nested}; the driver's canonicalizer cannot hash them"

@@ -5,8 +5,10 @@ scipy-free closed forms and numpy brute-force cross-checks."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from movie_rankings_spark.operators.disttests import spearman_rho
@@ -257,3 +259,28 @@ def test_grouped_ridge_zero_lambda_equals_ols(spark):
     assert abs(rid["slope_ridge"] - ols["slope"]) < 1e-12
     assert abs(rid["intercept_ridge"] - ols["intercept"]) < 1e-9
     assert rid["shrinkage"] == 1.0
+
+
+def test_spearman_oracle_is_correctly_rounded_at_sf01(spark, sf_dir):
+    """At sf0.1 the oracle's three integer moments pass 2^64, where
+    DuckDB's HUGEINT->DOUBLE cast is not correctly rounded (the
+    numerator 50580143560018800000 became 5.0580143560018805e19); the
+    oracle casts them through VARCHAR, and then agrees with Spark's
+    exact decimals to the last bit."""
+    import duckdb
+
+    from movie_rankings_spark.catalog import table_path
+    from movie_rankings_spark.plans.all_queries import ORACLES, QUERIES
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    if not os.path.isdir(sf01):
+        pytest.skip("needs the sf0.1 tables")
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{table_path(sf01, 'lineitem')}')"
+    )
+    [(duck_n, duck_rho)] = con.execute(ORACLES["spearman_qty_price"]).fetchall()
+    con.close()
+    [row] = QUERIES["spearman_qty_price"](spark, sf01).collect()
+    assert (row["n_rows"], row["rho"]) == (duck_n, duck_rho)

@@ -6,7 +6,7 @@ Runs the named registered queries (all of them by default) at
 $SPARK_GRAFT_SF_DIR (default: the sf0.1 test tables) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric", "value"
 (total sec), "unit", "queries" {name: sec}, "sf"}. Timing is wall-clock
-around building and collecting each query, best of N, after a session
+around building and collecting each query, best of 2, after a session
 warm-up.
 
 Every run also writes a Spark event log into a temporary directory,
@@ -20,7 +20,6 @@ over named queries writes only to $SPARK_GRAFT_BENCH_OUT, if set.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import shlex
@@ -489,25 +488,6 @@ def _default_bench_out(repo_dir: str, sf_tag: str, loaded: bool = False) -> str:
     )
 
 
-def _baseline_seconds() -> dict[str, float]:
-    """Per-query anchors from BASELINE.md's table (empty if absent).
-    Used only to decide where extra noise-floor repeats are worth
-    spending — never to alter a measured value."""
-    import re
-
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE.md")
-    out: dict[str, float] = {}
-    try:
-        with open(path, encoding="utf-8") as fh:
-            for line in fh:
-                m = re.match(r"\|\s*([a-z0-9_]+)\s*\|\s*([0-9.]+)\s*\|", line)
-                if m:
-                    out[m.group(1)] = float(m.group(2))
-    except OSError:
-        pass
-    return out
-
-
 def _log_events_to(log_dir: str) -> None:
     """Make the session started next write an uncompressed event log
     into ``log_dir``: spark-submit ``--conf`` entries, set before the
@@ -640,15 +620,14 @@ def suite_totals(queries: dict[str, dict[str, float]]) -> dict[str, float]:
     }
 
 
-def _time_queries(spark, names, sf_dir, sf, capture):
-    """Best-of-N wall seconds of each query, and per query the build
+def _time_queries(spark, names, sf_dir, capture):
+    """Best-of-2 wall seconds of each query, and per query the build
     seconds, collect seconds, Catalyst ms and started stream ids of
     every timed run plus the session drift over all of its runs."""
     from movie_rankings_spark import release_persisted
     from perfbench.run import _catalyst_ms
 
     sc = spark.sparkContext
-    baseline = _baseline_seconds()
     timings: dict[str, float] = {}
     runs: dict[str, list[tuple[float, float, float, list[str]]]] = {}
     drifts: dict[str, tuple[int, int, int]] = {}
@@ -657,15 +636,7 @@ def _time_queries(spark, names, sf_dir, sf, capture):
         before = session_snapshot(spark)
         runs[name] = reps = []
         best, n = float("inf"), 0
-        # best-of-N: min estimates the noise floor. Two runs normally;
-        # when the min still sits >1.3x the recorded BASELINE.md anchor
-        # the discrepancy is as likely a GC pause / scheduler hiccup as
-        # a real regression, so up to 3 extra repeats refine the min —
-        # a genuine regression stays slow through all of them.
-        max_runs = 2
-        # anchors are sf0.1 measurements — meaningless at other scales
-        anchor = baseline.get(name) if sf == 0.1 else None
-        while len(reps) < max_runs:
+        for _ in range(2):  # best-of-2: the min estimates the noise floor
             started = len(capture.started)
             sc.setJobGroup(f"b|{len(reps)}|{name}", name)
             start = time.perf_counter()
@@ -680,13 +651,6 @@ def _time_queries(spark, names, sf_dir, sf, capture):
                 (built - start, end - built, _catalyst_ms(df), capture.started[started:])
             )
             best = min(best, end - start)
-            if (
-                len(reps) == max_runs
-                and max_runs < 5
-                and anchor is not None
-                and best > 1.3 * anchor
-            ):
-                max_runs += 1
         timings[name] = round(best, 4)
         print(f"# {name}: {best:.3f}s rows={n} runs={len(reps)}", file=sys.stderr)
         # cache hygiene between queries: operators persist reused
@@ -697,8 +661,6 @@ def _time_queries(spark, names, sf_dir, sf, capture):
         # isolated cost). Releasing them between queries measures each
         # query's own cost — within-query reuse still benefits.
         release_persisted()
-        gc.collect()  # release py-side refs so ContextCleaner reaps
-        # checkpointed RDDs from the iterative operators
         drifts[name] = drift(before, session_snapshot(spark))
     return timings, runs, drifts
 
@@ -792,7 +754,7 @@ def _bench(names: list[str], subset: bool, log_dir: str) -> int:
     calib = calibration_seconds(spark, sf_dir)
     print(f"# calibration: {calib:.3f}s", file=sys.stderr)
 
-    timings, runs, drifts = _time_queries(spark, names, sf_dir, sf, capture)
+    timings, runs, drifts = _time_queries(spark, names, sf_dir, capture)
     per_query = _profile(spark, capture, log_dir, runs, drifts)
     suite = suite_totals(per_query)
     print(f"# suite {json.dumps(suite, separators=(',', ':'))}", file=sys.stderr)

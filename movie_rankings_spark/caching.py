@@ -1,22 +1,27 @@
-"""Library-scoped persist tracking + release hook.
+"""Library-scoped persist and checkpoint tracking + release hook.
 
-Operators persist reused intermediates (join sides, iterative state,
-threshold tables) and cannot unpersist them before returning — the
-returned lazy plan still references them. In a long-lived session
-those entries accumulate into executor memory pressure, and without
-this hook the only remedy was a catalog-wide
+Operators persist or locally checkpoint reused intermediates (join
+sides, iterative state, threshold tables) and cannot release them
+before returning — the returned lazy plan still references them. In a
+long-lived session those entries accumulate into executor memory
+pressure, and without this hook the only remedy was a catalog-wide
 ``spark.catalog.clearCache()`` that also evicts the CONSUMER's own
 cached frames (the advice finding on hll_pairwise_overlap et al.).
 
 Every persist inside this library goes through
-``DataFrame.persist_tracked()`` (registered here, pandas-accessor
-style — ``DataFrame.persist`` itself is untouched), which records the
-handle in a module registry. After materializing a query's result,
-call :func:`release_persisted` to unpersist exactly the library's
-intermediates — consumer caches survive.
+``DataFrame.persist_tracked()`` and every local checkpoint through
+``DataFrame.checkpoint_tracked()`` or :class:`rotating_checkpoint`
+(registered here, pandas-accessor style — ``DataFrame.persist`` and
+``localCheckpoint`` themselves are untouched), which record the
+DataFrame or the checkpoint's RDD in a module registry. After
+materializing a query's result, call :func:`release_persisted` to
+unpersist exactly the library's intermediates — consumer caches
+survive.
 
-Releasing before a returned plan is materialized is safe (Spark
-recomputes), it just forfeits the reuse the persist bought.
+Releasing a persist before a returned plan is materialized is safe
+(Spark recomputes), it just forfeits the reuse the persist bought. A
+released checkpoint is gone: its data exists nowhere else, so a plan
+that reads it fails. Release only after the last read.
 
 Thread-safety: the registry is guarded by a lock, and it is
 THREAD-SCOPED — each thread tracks (and releases) only its own
@@ -39,19 +44,20 @@ import weakref
 from pyspark.sql import DataFrame
 
 _LOCK = threading.Lock()
-# thread ident -> (weakref to owning Thread, tracked persists in
-# insertion order). The weakref disambiguates ident reuse: a bucket
-# whose thread object is dead (or collected) belongs to a finished
-# thread and is reaped — never inherited by a new thread that drew
-# the same ident.
-_TRACKED: dict[int, tuple[weakref.ref, list[DataFrame]]] = {}
+# thread ident -> (weakref to owning Thread, tracked DataFrames and
+# checkpoint JVM RDDs in insertion order; both have
+# ``unpersist(blocking)``). The weakref disambiguates ident reuse: a
+# bucket whose thread object is dead (or collected) belongs to a
+# finished thread and is reaped — never inherited by a new thread that
+# drew the same ident.
+_TRACKED: dict[int, tuple[weakref.ref, list]] = {}
 
 
-def _reap_dead_locked() -> list[DataFrame]:
+def _reap_dead_locked() -> list:
     """Drop buckets owned by dead/collected threads; return their
     orphaned frames for the caller to unpersist OUTSIDE the lock
     (unpersist does a JVM round-trip)."""
-    orphans: list[DataFrame] = []
+    orphans: list = []
     for ident in [
         i
         for i, (ref, _) in _TRACKED.items()
@@ -61,7 +67,7 @@ def _reap_dead_locked() -> list[DataFrame]:
     return orphans
 
 
-def _unpersist_quiet(frames: list[DataFrame], blocking: bool = False) -> int:
+def _unpersist_quiet(frames: list, blocking: bool = False) -> int:
     n = 0
     for df in frames:
         try:
@@ -72,7 +78,7 @@ def _unpersist_quiet(frames: list[DataFrame], blocking: bool = False) -> int:
     return n
 
 
-def _bucket() -> list[DataFrame]:
+def _bucket() -> list:
     t = threading.current_thread()
     with _LOCK:
         orphans = _reap_dead_locked()
@@ -89,26 +95,52 @@ def _bucket() -> list[DataFrame]:
     return entry[1]
 
 
+def _track(handle) -> None:
+    bucket = _bucket()
+    with _LOCK:
+        bucket.append(handle)
+
+
 def _persist_tracked(self: DataFrame, *args, **kwargs) -> DataFrame:
     """``df.persist(...)`` + registration in the calling thread's
     release registry. Same signature/return as ``DataFrame.persist``."""
     out = self.persist(*args, **kwargs)
-    bucket = _bucket()
-    with _LOCK:
-        bucket.append(out)
+    _track(out)
+    return out
+
+
+def _checkpoint_rdd(out: DataFrame):
+    """The JVM RDD a ``localCheckpoint`` result reads, or None.
+    ``Dataset.localCheckpoint`` always returns a ``LogicalRDD``
+    wrapping exactly the RDD it persisted; anything else (no known
+    Spark version) is left untracked rather than guessed at."""
+    plan = out._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    return plan.rdd()
+
+
+def _checkpoint_tracked(self: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)`` + registration of the checkpoint's
+    RDD in the calling thread's release registry."""
+    out = self.localCheckpoint(eager=eager)
+    rdd = _checkpoint_rdd(out)
+    if rdd is not None:
+        _track(rdd)
     return out
 
 
 DataFrame.persist_tracked = _persist_tracked  # type: ignore[attr-defined]
+DataFrame.checkpoint_tracked = _checkpoint_tracked  # type: ignore[attr-defined]
 
 
 def release_persisted(blocking: bool = False) -> int:
-    """Unpersist every DataFrame THIS THREAD persisted since its last
-    release; returns how many were released. Only library-tracked
-    frames from the calling thread are touched — never the consumer's
-    own cache, never another thread's in-flight intermediates.
-    Dropping the strong references here also lets the ContextCleaner
-    reap any localCheckpoint RDDs the released plans were pinning."""
+    """Unpersist every DataFrame and checkpoint RDD THIS THREAD tracked
+    since its last release; returns how many were released. Only
+    library-tracked handles from the calling thread are touched — never
+    the consumer's own cache, never another thread's in-flight
+    intermediates. A released checkpoint can no longer be read, so
+    call this only after the last read of the plans built on it."""
     t = threading.current_thread()
     with _LOCK:
         orphans = _reap_dead_locked()
@@ -121,8 +153,8 @@ def release_persisted(blocking: bool = False) -> int:
 
 
 def tracked_count() -> int:
-    """Number of currently tracked (not yet released) persists for the
-    calling thread."""
+    """Number of currently tracked (not yet released) persists and
+    checkpoints for the calling thread."""
     t = threading.current_thread()
     with _LOCK:
         orphans = _reap_dead_locked()
@@ -159,11 +191,11 @@ class rotating_checkpoint:
         ...                    # e.localCheckpoint()
 
     Each call reads the checkpoint RDD handle DIRECTLY off the
-    returned plan — ``Dataset.localCheckpoint`` always returns a
-    ``LogicalRDD`` wrapping exactly the RDD it persisted — then
-    unpersists the one the PREVIOUS call created: the new checkpoint
-    never reads it (it materialized from it already). The final
-    checkpoint is never released (the returned plan reads it).
+    returned plan (:func:`_checkpoint_rdd`), then unpersists the one
+    the PREVIOUS call created: the new checkpoint never reads it (it
+    materialized from it already). Each round checkpoints through
+    ``checkpoint_tracked``, so :func:`release_persisted` frees the
+    final one, which the returned plan reads.
 
     Identifying the RDD from the plan (r9, replacing a global
     persistent-registry diff) is what makes the rotation safe under
@@ -180,16 +212,9 @@ class rotating_checkpoint:
     def __init__(self, spark) -> None:
         self._prev: list[object] = []
 
-    @staticmethod
-    def _checkpoint_rdd(out: DataFrame):
-        plan = out._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return None
-        return plan.rdd()
-
     def __call__(self, df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint(eager=True)
-        created = self._checkpoint_rdd(out)
+        out = df.checkpoint_tracked(eager=True)
+        created = _checkpoint_rdd(out)
         for rdd in self._prev:
             try:
                 rdd.unpersist(False)

@@ -97,12 +97,12 @@ def connected_components(
     ))
     # node-sized and read AFTER the loop: materialize it OUTSIDE the
     # rotation now, before round 1 frees the initial edge checkpoint
-    # it reads (plain eager localCheckpoint, never released)
+    # it reads (an eager checkpoint of its own)
     nodes = (
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .checkpoint_tracked(eager=True)
     )
     n_nodes = nodes.count()
 

@@ -303,7 +303,7 @@ def hits_bipartite(
     ck_hm = rotating_checkpoint(edges.sparkSession)
     h = srcs.select(
         "src", F.lit(1.0 / float(n_src)).alias("h")
-    ).localCheckpoint(eager=True)
+    ).checkpoint_tracked(eager=True)
     sc = F.lit(1e15)
     a = None
     for _ in range(n_iter):

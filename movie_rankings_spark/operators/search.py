@@ -21,7 +21,7 @@ Scale: the term filter lands directly above the token explode, so
 only postings of the |query| terms survive the first aggregate (the
 inverted-index slice, not the full index); document lengths come from
 a second column-pruned scan (re-scan beats caching a corpus-sized
-exploded frame — the scan_audit-documented trade). df and avgdl are
+exploded frame — the plan lint's documented trade). df and avgdl are
 |terms|-row / 1-row broadcasts; the final top-k is
 TakeOrderedAndProject.
 """

@@ -1215,7 +1215,7 @@ def kmeans_centroids_exact(
     # would replay the whole training once per branch — truncate once,
     # eagerly, so training runs exactly once (16 rows pinned: trivial)
     if n_iters > 0:
-        cents = cents.localCheckpoint(eager=True)
+        cents = cents.checkpoint_tracked(eager=True)
     return cents
 
 

@@ -398,7 +398,7 @@ def strip_boilerplate(
     """
     # persisted: the chunk table feeds the recurring-span aggregate,
     # the anti-join probe side, AND the per-doc totals — without the
-    # persist each branch re-splits the corpus (scan_audit tripwire)
+    # persist each branch re-splits the corpus (plan-lint scan rule)
     chunks = (
         chunk_documents(docs, chunk_size=chunk_size, stride=chunk_size)
         .withColumn("fp", F.md5("chunk_text"))

@@ -2258,7 +2258,7 @@ def survival_customer_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     _daily's fixed grid cannot express under censoring. The fact
     aggregates ONCE into the persisted per-customer (first, last)
     table; the horizon scalar and the risk table both read that
-    |customers|-row cache (scan_audit-allowlisted cache-text shape),
+    |customers|-row cache (plan-lint-allowlisted cache-text shape),
     and the product-limit recurrence folds over the duration-domain-
     bounded risk array (operators/survival.py::kaplan_meier) -
     bit-exact vs the oracle's recursive-CTE replay."""

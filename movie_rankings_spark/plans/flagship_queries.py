@@ -129,15 +129,16 @@ def flagship_scraped_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_rankings_spark.sources.scrape_fixtures import FIXTURE_SOURCES
 
     u.register(spark)
-    spark.createDataFrame(
-        [(s.url, s.dialect) for s in FIXTURE_SOURCES], "url string, dialect string"
-    ).createOrReplaceTempView("ranked_sources")
     scraped = spark.sql(
         """
         SELECT s.url, p.rank, p.title
-        FROM ranked_sources s,
+        FROM {sources} s,
              LATERAL parse_ranked_list(s.url, s.dialect, 'fixture') p
-        """
+        """,
+        sources=spark.createDataFrame(
+            [(s.url, s.dialect) for s in FIXTURE_SOURCES],
+            "url string, dialect string",
+        ),
     )
     return flagship(scraped, n_sources=3, k=10)
 

@@ -1923,7 +1923,7 @@ def pipeline_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.join(F.broadcast(thr))
         .filter(F.col("quality") > F.col("_thr"))
         .select("doc_id", "lang", "text")
-        .localCheckpoint(eager=False)
+        .checkpoint_tracked(eager=False)
     )
     mixed = textops.token_budget_mix(kept, _MIX_BUDGET)
     packed = textops.pack_documents(mixed, max_tokens=256)

@@ -282,18 +282,19 @@ ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
 @REGISTRY.register("grouping_sets_orders", _GSETS_ORACLE)
 def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS through Spark SQL — same Expand-based
-    single-pass plan as rollup/cube, arbitrary set list."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_gsets")
+    single-pass plan as rollup/cube, arbitrary set list. The orders
+    frame is a parameter of the query, so no temp view outlives it."""
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                  AS total_price
-        FROM orders_gsets
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         ORDER BY o_orderstatus ASC NULLS FIRST,
                  o_orderpriority ASC NULLS FIRST
-        """
+        """,
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 

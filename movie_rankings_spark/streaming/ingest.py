@@ -39,6 +39,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
+from movie_rankings_spark.caching import release_persisted
+
 #: landing-zone stages live in the checkout's (git-ignored) .tmp
 _STAGE_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -82,8 +84,18 @@ def drain(
     apply_batch: Callable[[DataFrame, int], None],
 ) -> None:
     """Run ``apply_batch(batch_df, batch_id)`` on every micro-batch
-    currently available (at-least-once: key the write on batch_id)."""
-    run_available_now(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
+    currently available (at-least-once: key the write on batch_id).
+    What a batch persists or checkpoints is released when it returns:
+    batches run on a callback thread whose registry nothing else
+    drains, and a batch's writes are done by then."""
+
+    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        try:
+            apply_batch(batch_df, batch_id)
+        finally:
+            release_persisted()
+
+    run_available_now(stream.writeStream.foreachBatch(run_batch), checkpoint_dir)
 
 
 def _version_dir(table_dir: str, version: int) -> str:

@@ -30,7 +30,10 @@ def built_query(spark, sf_dir):
     name -> (output schema, simple physical plan; None for ``stream_*``
     queries, whose build runs a whole stream). The registry-wide
     compile, plan and schema lints share it, so Tier-1 builds each
-    query once for all of them."""
+    query once for all of them. Each build's persisted intermediates
+    are released once its plan is captured, so no query's cached
+    fragment rewrites a later query's plan."""
+    from movie_rankings_spark.caching import release_persisted
     from movie_rankings_spark.plans.all_queries import QUERIES
 
     memo = {}
@@ -44,6 +47,7 @@ def built_query(spark, sf_dir):
                     df._jdf.queryExecution(), "simple"
                 )
             memo[name] = (df.schema, plan)
+            release_persisted()
         return memo[name]
 
     return build

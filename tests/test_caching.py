@@ -5,6 +5,8 @@ remedy for leaked intermediates was catalog-wide clearCache)."""
 
 from __future__ import annotations
 
+import pytest
+
 import movie_rankings_spark as mrs
 
 
@@ -170,3 +172,44 @@ def test_rotating_checkpoint_never_adopts_foreign_persists(spark):
         assert got == sum(i * 2 + 1 for i in range(500))
     finally:
         foreign.unpersist()
+
+
+def test_release_frees_every_tracked_checkpoint(spark):
+    """A rotation's final checkpoint and a ``checkpoint_tracked`` one,
+    eager or lazy, leave no persisted RDD behind once released."""
+    from pyspark.sql import functions as F
+
+    from movie_rankings_spark.caching import (
+        _persistent_rdds,
+        rotating_checkpoint,
+    )
+
+    mrs.release_persisted()
+    base = set(_persistent_rdds(spark.sparkContext))
+    ckpt = rotating_checkpoint(spark)
+    df = ckpt(spark.range(100))
+    df = ckpt(df.select((F.col("id") + 1).alias("id")))
+    eager = spark.range(10).checkpoint_tracked()
+    lazy = spark.range(20).checkpoint_tracked(eager=False)
+    assert (df.count(), eager.count(), lazy.count()) == (100, 10, 20)
+    assert len(set(_persistent_rdds(spark.sparkContext)) - base) == 3
+    assert mrs.release_persisted() == 4  # both rotations + eager + lazy
+    assert set(_persistent_rdds(spark.sparkContext)) - base == set()
+
+
+@pytest.mark.parametrize(
+    "name", ["hits_purchase_graph", "stream_dedup_incremental"]
+)
+def test_checkpointing_query_leaves_no_rdds(spark, sf_dir, name):
+    """hits_purchase_graph checkpoints through two rotations and one
+    plain checkpoint; stream_dedup_incremental persists inside its
+    micro-batches, on a callback thread. After release the session
+    holds no RDD either query created."""
+    from movie_rankings_spark.caching import _persistent_rdds
+    from movie_rankings_spark.plans.all_queries import QUERIES
+
+    mrs.release_persisted()
+    base = set(_persistent_rdds(spark.sparkContext))
+    assert QUERIES[name](spark, sf_dir).collect()
+    mrs.release_persisted()
+    assert set(_persistent_rdds(spark.sparkContext)) - base == set()

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from movie_rankings_spark.catalog import load_table
 from movie_rankings_spark.plans import all_queries
+from movie_rankings_spark.session import session_conf
 from tests.conftest import SF_DIR
 
 
@@ -259,11 +260,13 @@ def test_parquet_aggregate_pushdown_metadata_only(spark):
     is why the capability is pinned behind the explicit conf swap."""
     from pyspark.sql import functions as FF
 
-    prev_v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
-    prev_agg = spark.conf.get("spark.sql.parquet.aggregatePushdown")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    try:
+    with session_conf(
+        spark,
+        {
+            "spark.sql.parquet.aggregatePushdown": "true",
+            "spark.sql.sources.useV1SourceList": "",
+        },
+    ):
         df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
         q = df.agg(
             FF.count(FF.lit(1)).alias("n"),
@@ -273,9 +276,6 @@ def test_parquet_aggregate_pushdown_metadata_only(spark):
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert "PushedAggregation: [COUNT(*), MIN(o_orderkey), MAX(o_orderkey)]" in plan
         row = q.first()
-    finally:
-        spark.conf.set("spark.sql.sources.useV1SourceList", prev_v1)
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", prev_agg)
     full = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     assert row["n"] == full.count()
     assert row["mn"] == full.agg(FF.min("o_orderkey")).first()[0]

@@ -22,7 +22,6 @@ def test_ingest_is_exactly_once_and_incremental(spark, sf_dir, tmp_path):
 
     src = table_path(sf_dir, "events")
     shutil.copyfile(src, landing / "batch1.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     n_src = spark.read.schema(SCHEMA).parquet(str(landing)).count()
 
     def run():

@@ -12,23 +12,18 @@ import re
 import pytest
 
 from movie_rankings_spark.plans import all_queries
+from movie_rankings_spark.session import session_conf
+from tests.test_plan_lint import _BATCH, _PY_NODE, _PYTHON_RESIDENT
 
 
-def _plan(spark, sf_dir, name: str) -> str:
-    df = all_queries.QUERIES[name](spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
-    )
-
-
-def test_q1_filter_pushed_to_scan(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q1_pricing_summary")
+def test_q1_filter_pushed_to_scan(built_query):
+    plan = built_query("q1_pricing_summary")[1]
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # column pruning: o_orderkey etc not read; scan schema stays narrow
     assert "l_comment" not in plan
 
 
-def test_relational_plans_stay_jvm_side(spark, sf_dir):
+def test_relational_plans_stay_jvm_side(built_query):
     """No Python evaluation nodes anywhere in the relational tier —
     everything compiles to native expressions."""
     for name in (
@@ -39,44 +34,44 @@ def test_relational_plans_stay_jvm_side(spark, sf_dir):
         "window_events_analytics",
         "json_props_stats",
     ):
-        plan = _plan(spark, sf_dir, name)
+        plan = built_query(name)[1]
         assert "EvalPython" not in plan, name
 
 
-def test_q3_broadcasts_customer(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q3_shipping_priority")
+def test_q3_broadcasts_customer(built_query):
+    plan = built_query("q3_shipping_priority")[1]
     assert "BroadcastHashJoin" in plan
 
 
-def test_q3_top10_is_take_ordered(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q3_shipping_priority")
+def test_q3_top10_is_take_ordered(built_query):
+    plan = built_query("q3_shipping_priority")[1]
     assert "TakeOrderedAndProject" in plan
     # top-k must not appear as a global Sort + CollectLimit
     assert "GlobalLimit" not in plan
 
 
-def test_q5_all_dims_broadcast(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q5_local_supplier_revenue")
+def test_q5_all_dims_broadcast(built_query):
+    plan = built_query("q5_local_supplier_revenue")[1]
     # 4 broadcast joins (customer, supplier, nation, region);
     # only lineitem⋈orders may shuffle
     assert plan.count("BroadcastHashJoin") >= 4
 
 
-def test_q4_semi_join(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q4_order_priority_exists")
+def test_q4_semi_join(built_query):
+    plan = built_query("q4_order_priority_exists")[1]
     assert "LeftSemi" in plan
 
 
-def test_flagship_single_shuffle_for_window_and_agg(spark, sf_dir):
+def test_flagship_single_shuffle_for_window_and_agg(built_query):
     """Window count on title_comp and the following groupBy share the
     same key — Catalyst must not add a second exchange."""
-    plan = _plan(spark, sf_dir, "flagship_fixture")
+    plan = built_query("flagship_fixture")[1]
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"expected 1 hash exchange, got {n_exchanges}"
 
 
-def test_window_events_single_shuffle(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "window_events_analytics")
+def test_window_events_single_shuffle(built_query):
+    plan = built_query("window_events_analytics")[1]
     # two window specs (ts order + value order) over the same
     # user_id partitioning: one exchange, two in-partition sorts
     assert plan.count("Exchange hashpartitioning") == 1
@@ -90,8 +85,8 @@ def test_every_query_compiles(built_query, name):
     assert schema is not None
 
 
-def test_q6_filters_pushed_to_scan(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q6_forecast_revenue")
+def test_q6_filters_pushed_to_scan(built_query):
+    plan = built_query("q6_forecast_revenue")[1]
     assert "PushedFilters: [IsNotNull(l_shipdate)" in plan
     # (explainString truncates the filter list, so match the prefix)
     assert "GreaterThanOrEqual(l_shipda" in plan
@@ -99,27 +94,27 @@ def test_q6_filters_pushed_to_scan(spark, sf_dir):
     assert "l_returnflag" not in plan.split("ReadSchema")[-1]
 
 
-def test_q10_broadcasts_dims_and_takes_ordered(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q10_returned_items")
+def test_q10_broadcasts_dims_and_takes_ordered(built_query):
+    plan = built_query("q10_returned_items")[1]
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
 
 
-def test_q18_prefilters_fact_before_join(spark, sf_dir):
+def test_q18_prefilters_fact_before_join(built_query):
     """The HAVING aggregate must sit below the orders join."""
-    plan = _plan(spark, sf_dir, "q18_large_orders")
+    plan = built_query("q18_large_orders")[1]
     assert "TakeOrderedAndProject" in plan
     assert plan.index("HashAggregate") > plan.index("TakeOrderedAndProject")
 
 
-def test_grouping_queries_single_expand_pass(spark, sf_dir):
+def test_grouping_queries_single_expand_pass(built_query):
     for name in ("cube_lineitem_flags", "grouping_sets_orders", "rollup_orders"):
-        plan = _plan(spark, sf_dir, name)
+        plan = built_query(name)[1]
         assert plan.count("Expand") == 1, name
         assert "EvalPython" not in plan, name
 
 
-def test_new_relational_queries_stay_jvm_side(spark, sf_dir):
+def test_new_relational_queries_stay_jvm_side(built_query):
     for name in (
         "q6_forecast_revenue",
         "q10_returned_items",
@@ -130,7 +125,7 @@ def test_new_relational_queries_stay_jvm_side(spark, sf_dir):
         "asof_purchase_context",
         "dedup_embedding_cosine",
     ):
-        plan = _plan(spark, sf_dir, name)
+        plan = built_query(name)[1]
         assert "EvalPython" not in plan, name
 
 
@@ -207,15 +202,15 @@ def test_approx_percentiles_within_tolerance_of_exact(spark, sf_dir):
     )
 
 
-def test_q13_preserves_left_outer(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q13_customer_distribution")
+def test_q13_preserves_left_outer(built_query):
+    plan = built_query("q13_customer_distribution")[1]
     assert "LeftOuter" in plan
 
 
-def test_q19_pushes_common_conjuncts_below_join(spark, sf_dir):
+def test_q19_pushes_common_conjuncts_below_join(built_query):
     """Catalyst must extract single-side conjuncts from the OR-of-ANDs
     so both scans are filtered before the join."""
-    plan = _plan(spark, sf_dir, "q19_disjunctive_revenue")
+    plan = built_query("q19_disjunctive_revenue")[1]
     # lineitem side: quantity range union pushed to the scan
     assert "l_quantity" in plan.split("PushedFilters")[1].split("]")[0] or \
         "GreaterThanOrEqual(l_quantity" in plan
@@ -223,9 +218,9 @@ def test_q19_pushes_common_conjuncts_below_join(spark, sf_dir):
     assert plan.count("PushedFilters") == 2
 
 
-def test_q22_no_global_window(spark, sf_dir):
+def test_q22_no_global_window(built_query):
     """Scalar AVG must be a broadcast join, never Window over ()."""
-    plan = _plan(spark, sf_dir, "q22_global_sales_opportunity")
+    plan = built_query("q22_global_sales_opportunity")[1]
     assert "Window" not in plan
     assert "LeftAnti" in plan
 
@@ -248,19 +243,19 @@ def test_shuffle_deterministic_no_single_partition(spark, sf_dir):
     assert "EvalPython" not in plan
 
 
-def test_q21_semi_and_anti_self_joins(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q21_waiting_suppliers")
+def test_q21_semi_and_anti_self_joins(built_query):
+    plan = built_query("q21_waiting_suppliers")[1]
     assert "LeftSemi" in plan
     assert "LeftAnti" in plan
     assert "TakeOrderedAndProject" in plan
     assert "EvalPython" not in plan
 
 
-def test_q2_decorrelated_no_nested_loop(spark, sf_dir):
+def test_q2_decorrelated_no_nested_loop(built_query):
     """The correlated MIN scalar subquery must de-correlate into a
     per-part window over the dim-pruned cost slice — never a
     per-outer-row re-execution (nested loop) or a second fact scan."""
-    plan = _plan(spark, sf_dir, "q2_min_cost_supplier")
+    plan = built_query("q2_min_cost_supplier")[1]
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "Window" in plan
@@ -271,97 +266,61 @@ def test_q2_decorrelated_no_nested_loop(spark, sf_dir):
     assert "EvalPython" not in plan
 
 
-def test_q8_part_filter_pushed_and_dims_broadcast(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q8_market_share")
+def test_q8_part_filter_pushed_and_dims_broadcast(built_query):
+    plan = built_query("q8_market_share")[1]
     # p_type filter must reach the part scan, not evaluate post-join
     assert "EqualTo(p_type,ECONOMY)" in plan
     assert plan.count("BroadcastHashJoin") >= 5
 
 
-def test_q11_threshold_is_broadcast_not_window(spark, sf_dir):
+def test_q11_threshold_is_broadcast_not_window(built_query):
     """The global 0.1% threshold joins back as a 1-row broadcast —
     never a Window over an empty partitioning (single-task sort)."""
-    plan = _plan(spark, sf_dir, "q11_important_parts")
+    plan = built_query("q11_important_parts")[1]
     assert "Window" not in plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_q16_anti_join_excludes_suppliers(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q16_supplier_part_profile")
+def test_q16_anti_join_excludes_suppliers(built_query):
+    plan = built_query("q16_supplier_part_profile")[1]
     assert "LeftAnti" in plan
     assert "EvalPython" not in plan
 
 
-def test_sessionize_single_hash_shuffle(spark, sf_dir):
+def test_sessionize_single_hash_shuffle(built_query):
     """Both windows (lag + running sum) and the session aggregate share
     the user_id partitioning — one hash exchange end-to-end."""
-    plan = _plan(spark, sf_dir, "sessionize_events")
+    plan = built_query("sessionize_events")[1]
     assert plan.count("Exchange hashpartitioning") == 1
     assert "EvalPython" not in plan
 
 
-#: The ONLY queries allowed a Python stage, each for a stated reason:
-#: Arrow GEMM (LSH signatures, numpy/IVF similarity), HTML parsing
-#: (no JVM parser), stubbed multimodal codecs, and the sequential
-#: packing recurrence. Everything else must compile 100% JVM-side.
-_PYTHON_RESIDENT = {
-    "dedup_embedding_lsh",
-    "flagship_scraped",
-    "flagship_scraped_udtf",  # LATERAL Python UDTF (fetch+parse per source)
-    "multimodal_features",
-    "pack_docs_batches",
-    "pipeline_curation_report",  # r10 composed journey ends in the packing recurrence (applyInPandas); all upstream stages are JVM codegen
-    "similarity_cosine_topk_numpy",
-    "similarity_ivf_topk",
-    # similarity_ivf_kmeans_topk left this set in r9: exact
-    # spherical k-means is pure JVM codegen (decimal folds), no Arrow
-    "similarity_pq_topk",  # PQ encode + ADC LUT scan
-    # dedup_semantic_clusters left this set in r9: exact SemDeDup is
-    # pure JVM codegen (decimal k-means + within-bucket cosine), no Arrow
-    "embedding_jl_projection",  # seeded-Gaussian GEMM
-    "vocab_heavy_hitters",  # per-partition candidate value_counts
-    "cogroup_asof_purchase",  # cogrouped merge_asof (FlatMapCoGroupsInPandas by design)
-    "embedding_pca_project",  # covariance + projection GEMM (mapInPandas by design)
-    "similarity_mmr_topk",  # greedy MMR selection over pooled candidates
-    "multimodal_audio_frames",  # windowed DSP over binary payloads (mapInPandas by design)
-    "multimodal_resize_meta",  # r4: real PNG/JFIF header decode over binary payloads (mapInPandas by design; resize math itself is codegen'd)
-    "flagship_pandas_api",  # pandas-API front-end demo; stages Python eval by design (DataFrame form is the production path)
-    "dedup_embedding_cosine",  # r4 block-GEMM rewrite: applyInPandas vectorized GEMM over block pairs (352s->3.2s); reviewed fast plan
-    "knn_label_propagation",  # exact holdout-vs-corpus scoring via Arrow-batched GEMM cut (reviewed); IVF variant is the scale path
-    "knn_label_propagation_ivf",  # IVF bucket assign + probe scoring GEMMs (r5; the kNN scale path)
-}
-
-_PY_NODE = re.compile(r"InPandas|EvalPython|PythonUDF|BatchEvalPython", re.I)
-
-
-@pytest.mark.parametrize(
-    "name",
-    sorted(n for n in all_queries.QUERIES if not n.startswith("stream_")),
-)
+@pytest.mark.parametrize("name", _BATCH)
 def test_python_stages_only_where_declared(built_query, name):
     """Catching accidental UDF creep: a Python node appearing in any
-    other query is a performance regression, not a style issue."""
+    query outside the plan lint's ``_PYTHON_RESIDENT`` is a performance
+    regression, not a style issue."""
     _, plan = built_query(name)
     has_py = bool(_PY_NODE.search(plan))
     assert has_py == (name in _PYTHON_RESIDENT), name
 
 
-def test_changelog_snapshot_is_aggregation_not_window(spark, sf_dir):
+def test_changelog_snapshot_is_aggregation_not_window(built_query):
     """Latest-wins compaction must compile to max_by aggregation
     (map-side combine, no sort), never a row_number window over the
     full history."""
-    plan = _plan(spark, sf_dir, "changelog_latest_snapshot")
+    plan = built_query("changelog_latest_snapshot")[1]
     assert "max_by" in plan
     assert "partial_max" in plan  # partial agg = map-side pre-reduction
     assert "Window" not in plan
     assert "row_number" not in plan
 
 
-def test_rolling_revenue_windows_over_preaggregate(spark, sf_dir):
+def test_rolling_revenue_windows_over_preaggregate(built_query):
     """The 7-day RANGE frame must consume the (customer, day)
     pre-aggregate: the window sort sees one row per active day, not
     one per order."""
-    plan = _plan(spark, sf_dir, "window_rolling_revenue_7d")
+    plan = built_query("window_rolling_revenue_7d")[1]
     assert "RangeFrame" in plan  # genuine time-range frame, not ROWS
     # tree prints top-down: the Window node sits above the day-level
     # HashAggregate it consumes
@@ -374,26 +333,17 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark):
     into the other side's scan (might_contain below the join). The
     production thresholds (10MB/10GB) only fire at scale, so this
     pins the mechanism with them lowered."""
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB"
-        )
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            "0",
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
+    bloom = "spark.sql.optimizer.runtime.bloomFilter."
+    with session_conf(
+        spark,
+        {
+            bloom + "creationSideThreshold": "100MB",
+            bloom + "applicationSideScanSizeThreshold": "0",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    ):
         sf = "/root/testdata/sf0.01"
         li = spark.read.parquet(f"{sf}/lineitem.parquet")
         orders = spark.read.parquet(f"{sf}/orders.parquet").filter(
@@ -409,19 +359,13 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark):
         )
         assert "might_contain" in plan
         assert "bloom_filter_agg" in plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
-def test_repetition_bigram_single_tokenize_no_join(spark, sf_dir):
+def test_repetition_bigram_single_tokenize_no_join(built_query):
     """The token array must materialize once below the Generate
     (projection collapse would re-split per shingle reference) and the
     per-doc max must fold into the aggregation chain, not a join."""
-    plan = _plan(spark, sf_dir, "quality_repetition_bigram")
+    plan = built_query("quality_repetition_bigram")[1]
     assert plan.count("split(text") == 1
     assert "Join" not in plan
 
@@ -486,12 +430,12 @@ def test_curriculum_order_no_single_partition(spark, sf_dir):
     assert deciles == sorted(deciles)
 
 
-def test_bitmap_rollup_merges_cached_daily_table(spark, sf_dir):
+def test_bitmap_rollup_merges_cached_daily_table(spark, sf_dir, built_query):
     """The merged per-type distinct must come from bitmap_or_agg over
     the PERSISTED daily bitmap table (one events scan feeds both
     branches), and the exact merge must agree with countDistinct."""
+    plan = built_query("bitmap_users_rollup")[1]
     df = all_queries.QUERIES["bitmap_users_rollup"](spark, sf_dir)
-    plan = _plan(spark, sf_dir, "bitmap_users_rollup")
     assert "bitmap_or_agg" in plan
     assert "InMemoryTableScan" in plan
     rows = {r["event_type"]: r for r in df.collect()}

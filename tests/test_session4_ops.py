@@ -258,44 +258,6 @@ def test_stream_running_topk_matches_batch(spark):
     assert got == want
 
 
-# --- plan-audit heuristics --------------------------------------------------
-
-
-def test_plan_audit_flags_global_window_consumer():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "plan_audit", "/root/repo/tools/plan_audit.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    bad = (
-        "+- Window [row_number()], [], [k ASC]\n"
-        "   +- Exchange SinglePartition, ENSURE_REQUIREMENTS\n"
-        "      +- FileScan parquet\n"
-    )
-    assert mod.audit_plan("some_query", bad) == ["SinglePartition->Window"]
-
-    # 1-row global aggregate over a windowed CHILD must NOT flag:
-    # the Window is below the exchange, not consuming it
-    ok = (
-        "+- HashAggregate(keys=[], functions=[percentile(q)])\n"
-        "   +- Exchange SinglePartition, ENSURE_REQUIREMENTS\n"
-        "      +- HashAggregate(keys=[], functions=[partial_percentile(q)])\n"
-        "         +- Window [row_number()], [grp], [k ASC]\n"
-    )
-    assert mod.audit_plan("some_query", ok) == []
-
-    assert mod.audit_plan("some_query", "+- CartesianProduct\n") == [
-        "CartesianProduct"
-    ]
-    assert mod.audit_plan("some_query", "+- BatchEvalPython [f(x)]\n") == [
-        "BatchEvalPython(row-at-a-time UDF)"
-    ]
-    assert mod.audit_plan("flagship_scraped_udtf", "+- BatchEvalPython\n") == []
-
-
 def test_profile_columns_orders_approx_registered_gate(spark):
     """r6 form: the registered query now carries the HLL-vs-exact
     bound IN-QUERY as ndv_in_bound (the DuckDB oracle asserts it as

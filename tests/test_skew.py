@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.session import session_conf
+
 
 def test_aqe_splits_skewed_join_partitions(spark):
     # one key owns ~97% of the left side; thresholds lowered so the
@@ -17,10 +19,7 @@ def test_aqe_splits_skewed_join_partitions(spark):
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32KB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",  # force SMJ
     }
-    saved = {k: spark.conf.get(k, None) for k in conf}
-    try:
-        for k, v in conf.items():
-            spark.conf.set(k, v)
+    with session_conf(spark, conf):
         left = spark.range(0, 300_000).select(
             F.when(F.col("id") % 100 < 97, F.lit(0))
             .otherwise(F.col("id") % 100)
@@ -38,9 +37,3 @@ def test_aqe_splits_skewed_join_partitions(spark):
         final_plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in final_plan, final_plan[:2000]
         assert "skewed" in final_plan  # AQEShuffleRead …​ and skewed
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

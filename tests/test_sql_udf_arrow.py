@@ -7,8 +7,8 @@ Both are front-ends over semantics already checked elsewhere: the SQL
 UDF reproduces the title-normalization chain
 (functions/normalize.py::normalize_title, the reference's title_comp
 derivation), and the Arrow UDF is pinned to plan as ArrowEvalPython —
-not the row-at-a-time BatchEvalPython that tools/plan_audit.py trips
-on."""
+not the row-at-a-time BatchEvalPython that the plan lint
+(`pytest tests/test_plan_lint.py`) trips on."""
 
 from __future__ import annotations
 

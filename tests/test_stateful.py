@@ -20,6 +20,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from movie_rankings_spark.session import session_conf
 from movie_rankings_spark.streaming.stateful import UserLifetimeProcessor
 
 
@@ -385,14 +386,13 @@ def test_ttl_state_evicts_between_microbatches(spark, tmp_path):
         os.rename(os.path.join(tmp, part), dst)
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
 
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        )
+    }
+    with session_conf(spark, rocksdb):
         def run(ttl_ms):
             name = f"ttl_{uuid.uuid4().hex[:10]}"
             stream = (
@@ -426,8 +426,3 @@ def test_ttl_state_evicts_between_microbatches(spark, tmp_path):
 
         assert run(ttl_ms=1) == [2, 3]       # each batch counts alone
         assert run(ttl_ms=None) == [3, 5]    # state survives -> running
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)

@@ -14,6 +14,7 @@ from movie_rankings_spark.operators.statistics import (
 )
 from movie_rankings_spark.operators.timeseries import time_decayed_score
 from movie_rankings_spark.plans.all_queries import QUERIES
+from movie_rankings_spark.session import session_conf
 
 
 def test_grouped_ols_recovers_exact_line(spark):
@@ -307,12 +308,8 @@ def test_gini_single_partition_degenerate(spark):
     ref = 2 * sum((i + 1) * v for i, v in enumerate(s)) / (nn * sum(s)) - (
         nn + 1
     ) / nn
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
+    with session_conf(spark, {"spark.sql.shuffle.partitions": "1"}):
         r = gini_exact(df, "x").first()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert r["n_values"] == nn
     assert abs(r["gini"] - ref) < 1e-12
 

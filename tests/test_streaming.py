@@ -319,16 +319,16 @@ def test_rocksdb_state_store_provider_equals_batch(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from movie_rankings_spark.catalog import load_table
+    from movie_rankings_spark.session import session_conf
     from movie_rankings_spark.streaming import events as ev
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        )
+    }
+    with session_conf(spark, rocksdb):
         out = ev.run_to_batch(
             ev.tumbling_daily_counts(ev.events_stream(spark, sf_dir))
         )
@@ -336,11 +336,6 @@ def test_rocksdb_state_store_provider_equals_batch(spark, sf_dir):
             (r["day"], r["event_type"]): (r["n_events"], r["sum_value"])
             for r in out.collect()
         }
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
     e = load_table(spark, sf_dir, "events")
     want = {

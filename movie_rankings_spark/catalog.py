@@ -10,11 +10,15 @@ from __future__ import annotations
 
 import glob
 import os
-from typing import NamedTuple
+from collections.abc import Iterable
+from typing import Any, NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 TABLES = (
     "region",
@@ -132,6 +136,35 @@ def load_table(
     if name == "events":
         df = events_ts_micros(df)
     return _fanout_small_scan(df, meta, _FANOUT_KEY.get(name)) if fanout else df
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Any], schema: str | T.StructType
+) -> DataFrame:
+    """A driver-side literal frame: ``rows`` (tuples, Rows or dicts)
+    under ``schema`` (a StructType or a DDL string), sent to Spark as
+    one Arrow table. The engine's only ``createDataFrame`` call.
+
+    ``createDataFrame(list)`` plans as ``Scan ExistingRDD``: it
+    parallelizes the list and reserializes it in a Python-worker
+    stage, a fixed ~0.2 s per frame on 4 cores (each Python task
+    invalidates the import caches, and a zip-imported pyspark re-reads
+    its archive), and a ``LogicalRDD`` carries
+    no size statistics, so no join against it is ever broadcast
+    automatically. An Arrow table plans as a ``LocalTableScan``: no
+    RDD, no Python worker, real size statistics. Rows are verified
+    and converted exactly as ``createDataFrame(list)`` does (so a
+    naive datetime still means local time), then built column by
+    column."""
+    struct = schema if isinstance(schema, T.StructType) else T.DataType.fromDDL(schema)
+    verify = _make_type_verifier(struct)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(struct.toInternal(row))
+    arrow = to_arrow_schema(struct)
+    columns = [pa.array([r[i] for r in internal], f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.table(columns, schema=arrow), struct)
 
 
 def events_ts_micros(raw: DataFrame) -> DataFrame:

@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
+
 
 def last_touch_attribution(
     events: DataFrame,
@@ -231,7 +233,8 @@ def shapley_attribution(
     wcase = F.lit(None).cast("long")
     for size, wt in w.items():
         wcase = F.when(popcnt == size, F.lit(wt)).otherwise(wcase)
-    chan = spark.createDataFrame(
+    chan = local_frame(
+        spark,
         [(i, name) for i, name in enumerate(channels)], "c int, channel string"
     )
     v2 = vs.select(F.col("s").alias("s2"), F.col("v").alias("v2"))

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
 from movie_rankings_spark.functions.text import words
 
 
@@ -154,7 +155,8 @@ def cms_join_size_report(
     # colliding buckets — for near-disjoint inputs that row's dot is
     # 0 (the best estimate), so a depth-row spine restores it; min
     # over an incomplete row set would overestimate
-    spine = left.sparkSession.createDataFrame(
+    spine = local_frame(
+        left.sparkSession,
         [(i,) for i in range(depth)], "row int"
     )
     dots = (

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
 from movie_rankings_spark.functions.text import word_shingles
 
 
@@ -123,7 +124,7 @@ def contamination_report_bloom(
     # literal: a CreateArray of ~6k literals inflates the generated
     # code past JIT limits (measured ~4× slower whole-stage fallback).
     bits = build_bloom_bits(bench, "sh", num_bits, num_hashes)
-    bits_df = docs.sparkSession.createDataFrame([(bits,)], "_bf array<bigint>")
+    bits_df = local_frame(docs.sparkSession, [(bits,)], "_bf array<bigint>")
     cand = (
         _distinct_shingles(docs, n, "sh")
         .crossJoin(F.broadcast(bits_df))

@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
 from movie_rankings_spark.functions.text import content_fingerprint, word_shingles
 from movie_rankings_spark.functions.vectors import (
     NARROW,
@@ -548,7 +549,8 @@ def embedding_cosine_pairs(
     blocks = embeddings.select(
         "vec_id", "embedding", F.pmod(F.col("vec_id"), F.lit(n_blocks)).alias("blk")
     )
-    bp = spark.createDataFrame(
+    bp = local_frame(
+        spark,
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "ba int, bb int",
     )
@@ -874,7 +876,7 @@ def sorted_neighborhood_pairs(
     for p in range(n):
         offsets.append((p, running))
         running += counts.get(p, 0)
-    off = spark.createDataFrame(offsets, "_pid int, _offset long")
+    off = local_frame(spark, offsets, "_pid int, _offset long")
     w = Window.partitionBy("_pid").orderBy(F.asc("_key"), F.asc("doc_id"))
     pos = (
         part.withColumn("_local", F.row_number().over(w))

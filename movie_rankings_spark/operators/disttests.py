@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
+
 
 def _bucketed_cum2(
     df: DataFrame,
@@ -123,7 +125,8 @@ def _bucketed_cum2(
         ta, tb = totals.get(b, (0, 0))
         run_a += ta
         run_b += tb
-    off = spark.createDataFrame(
+    off = local_frame(
+        spark,
         offsets, "_bucket int, _off_a long, _off_b long"
     )
     w = Window.partitionBy("_bucket").orderBy("v").rowsBetween(
@@ -264,7 +267,8 @@ def benford_first_digit(df: DataFrame, cents_col: Column) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("long").alias("observed"))
     )
-    frame = spark.createDataFrame(
+    frame = local_frame(
+        spark,
         [(d, e) for d, e in BENFORD_EXPECTED.items()],
         "digit int, expected double",
     )

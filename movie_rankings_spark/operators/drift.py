@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
 from movie_rankings_spark.functions.text import words
 
 
@@ -132,7 +133,7 @@ def psi_feature_drift(
             .alias("cv"),
         )
     )
-    frame = spark.createDataFrame([(i,) for i in range(n_bins)], "bin int")
+    frame = local_frame(spark, [(i,) for i in range(n_bins)], "bin int")
     filled = (
         frame.join(obs, "bin", "left")
         .select(

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
+
 
 def quantize_int8(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Symmetric per-vector int8 quantization: scale = max|x| / 127,
@@ -236,7 +238,8 @@ def jl_rademacher_project(
     # whole-stage-codegen JIT method limit and drops to interpreted
     # eval (the Poisson-bootstrap lesson; measured 4.1s -> see module
     # bench note), while this shape keeps every expression JIT-able.
-    sign_rows = spark.createDataFrame(
+    sign_rows = local_frame(
+        spark,
         [(k, w[k]) for k in range(out_dim)], "k int, signs array<int>"
     )
     q = F.transform(

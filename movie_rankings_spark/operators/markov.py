@@ -15,6 +15,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
+
 
 def markov_steady_state(
     counts: DataFrame,
@@ -52,7 +54,8 @@ def markov_steady_state(
     """
     k = len(states)
     spark = counts.sparkSession
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(a, b, i, j)
          for i, a in enumerate(states)
          for j, b in enumerate(states)],
@@ -103,7 +106,8 @@ def markov_steady_state(
             F.sequence(F.lit(1), F.lit(n_iter)), pi0, step
         ).alias("pi")
     )
-    st = spark.createDataFrame(
+    st = local_frame(
+        spark,
         [(i, s) for i, s in enumerate(states)], "idx int, state string"
     )
     tot = rs.agg(F.sum("rn").cast("long").alias("tot"))

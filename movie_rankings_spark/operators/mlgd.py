@@ -27,6 +27,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
+
 
 def logreg_train(
     features: DataFrame,
@@ -85,7 +87,7 @@ def logreg_train_history_df(
     schema = "iter int, loss double, " + ", ".join(
         f"w{j} double" for j in range(d)
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # --- fixed-point variant (r9): engine-portable training -------------------
@@ -202,7 +204,7 @@ def logreg_train_fixedpoint(
     schema = "iter int, abs_err_sum_q long, " + ", ".join(
         f"w{j} long" for j in range(d)
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def logreg_fp_oracle_sql(

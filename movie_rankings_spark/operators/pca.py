@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
+
 _DEC = "decimal(28,12)"
 
 
@@ -323,7 +325,7 @@ def pca_power_exact(
     spark = emb.sparkSession
     comp_rows = [tuple([i, *[comps[c][i] for c in range(k)]]) for i in range(d)]
     comp_schema = "i int, " + ", ".join(f"v{c} long" for c in range(k))
-    comp_wide = spark.createDataFrame(comp_rows, comp_schema)
+    comp_wide = local_frame(spark, comp_rows, comp_schema)
     out = (
         flat.join(F.broadcast(comp_wide), "i")
         .groupBy("vec_id")

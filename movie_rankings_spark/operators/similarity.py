@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
 from movie_rankings_spark.functions.vectors import (
     _DEC,
     NARROW,
@@ -345,7 +346,7 @@ def ivf_topk(
     for qid, qv in zip(q_ids, q_mat):
         order = np.argsort(-(cent_norm @ qv))[:nprobe]
         probes.extend((int(qid), int(b)) for b in order)
-    probe_df = spark.createDataFrame(probes, "query_id long, bucket int")
+    probe_df = local_frame(spark, probes, "query_id long, bucket int")
 
     candidates = assigned.join(F.broadcast(probe_df), "bucket").filter(
         F.col("query_id") != F.col("vec_id")
@@ -736,7 +737,8 @@ def knn_label_propagation_ivf(
         .collect()
     )
     if not samp_rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "query_id long, true_label int, pred_label int, n_votes long"
         )
     samp = np.array([r["embedding"] for r in samp_rows], dtype=np.float64)

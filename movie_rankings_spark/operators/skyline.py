@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
+
 
 def skyline_2d(
     df: DataFrame,
@@ -90,7 +92,8 @@ def skyline_2d(
         cur = bmax.get(b)
         if cur is not None and (best is None or cur > best):
             best = cur
-    off = spark.createDataFrame(
+    off = local_frame(
+        spark,
         prefix, f"_bucket int, _before {df.schema[y_col].dataType.simpleString()}"
     )
     w = (

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
+
 
 def grouped_ols(
     points: DataFrame,
@@ -211,7 +213,7 @@ def quantile_rank_map(
         offsets.append((b, running))
         running += totals.get(b, 0)
     grand_n = running
-    off = spark.createDataFrame(offsets, "_bucket int, _offset long")
+    off = local_frame(spark, offsets, "_bucket int, _offset long")
     w = Window.partitionBy("_bucket").orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -341,7 +343,7 @@ def gini_exact(df: DataFrame, value_col: str) -> DataFrame:
     for b in range(len(bounds) + 1):
         offsets.append((b, running))
         running += totals.get(b, 0)
-    off = spark.createDataFrame(offsets, "_bucket int, _offset long")
+    off = local_frame(spark, offsets, "_bucket int, _offset long")
     w = Window.partitionBy("_bucket").orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -475,7 +477,7 @@ def coverage_topfrac(
         F.sum("c").cast("long").alias("n_total"),
         F.sum("s").cast("long").alias("s_total"),
     )
-    fr = spark.createDataFrame([(int(p),) for p in pcts], "pct_docs int")
+    fr = local_frame(spark, [(int(p),) for p in pcts], "pct_docs int")
     with_k = fr.crossJoin(F.broadcast(totals)).withColumn(
         "k_docs",
         F.floor(
@@ -572,7 +574,7 @@ def weighted_quantiles(
         offsets.append((b, running))
         running += totals.get(b, 0)
     total_w = running
-    off = spark.createDataFrame(offsets, "_bucket int, _offset long")
+    off = local_frame(spark, offsets, "_bucket int, _offset long")
     w = Window.partitionBy("_bucket").orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -753,7 +755,8 @@ def group_percentiles(
     cum = cells.withColumn("_cum", F.sum("c").over(w)).join(
         F.broadcast(ng), "g"
     )
-    q = spark.createDataFrame(
+    q = local_frame(
+        spark,
         list(quantiles), "quantile string, num long, den long"
     )
     k = F.floor(

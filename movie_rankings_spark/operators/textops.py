@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
 from movie_rankings_spark.functions.text import (
     LANG_ORDER,
     bpe_token_count,
@@ -279,7 +280,7 @@ def shuffle_deterministic(docs: DataFrame, buckets: int | None = None) -> DataFr
     for b in range(n):
         offsets.append((b, running))
         running += counts.get(b, 0)
-    off = spark.createDataFrame(offsets, "_bucket int, _offset long")
+    off = local_frame(spark, offsets, "_bucket int, _offset long")
 
     w = Window.partitionBy("_bucket").orderBy(
         F.col("shuffle_key").asc(), F.col("doc_id").asc()
@@ -764,7 +765,7 @@ def curriculum_order(docs: DataFrame, buckets: int | None = None) -> DataFrame:
     for b in range(10 * nb):
         offsets.append((b, running))
         running += counts.get(b, 0)
-    off = spark.createDataFrame(offsets, "_bucket int, _offset long")
+    off = local_frame(spark, offsets, "_bucket int, _offset long")
     w = Window.partitionBy("_bucket").orderBy(
         F.col("k").asc(), F.col("doc_id").asc()
     )

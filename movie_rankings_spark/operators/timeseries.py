@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
+
 
 def gapfill_daily(
     events: DataFrame,
@@ -317,7 +319,8 @@ def acf_daily(
         F.sum("x").cast("long"),
         F.sum(F.col("x").cast("decimal(19,0)") * F.col("x").cast("decimal(19,0)")),
     ).collect()[0]
-    lags = spark.createDataFrame(
+    lags = local_frame(
+        spark,
         [(k,) for k in range(1, max_lag + 1)], "lag int"
     )
     head = daily.select(
@@ -585,7 +588,8 @@ def ccf_daily(
         F.sum(d19(F.col("x")) * d19(F.col("x"))).cast("decimal(38,0)"),
         F.sum(d19(F.col("y")) * d19(F.col("y"))).cast("decimal(38,0)"),
     ).collect()[0]
-    lags = spark.createDataFrame(
+    lags = local_frame(
+        spark,
         [(k,) for k in range(-max_lag, max_lag + 1)], "lag int"
     )
     head = daily.select(

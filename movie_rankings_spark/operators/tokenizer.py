@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_rankings_spark.catalog import local_frame
 from movie_rankings_spark.functions.text import words
 
 
@@ -140,7 +141,8 @@ def bpe_train(docs: DataFrame, n_merges: int = 12) -> DataFrame:
         vocab = ckpt(vocab.select(fold.alias("symbols"), "wc"))
 
     spark = docs.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rules, "step int, left string, right string, merged string, n long"
     )
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_rankings_spark.catalog import load_table
+from movie_rankings_spark.catalog import load_table, local_frame
 from movie_rankings_spark.operators.flagship import flagship
 from movie_rankings_spark.operators.rankings import supplier_part_rankings
 from movie_rankings_spark.plans.registry import (
@@ -135,7 +135,8 @@ def flagship_scraped_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM {sources} s,
              LATERAL parse_ranked_list(s.url, s.dialect, 'fixture') p
         """,
-        sources=spark.createDataFrame(
+        sources=local_frame(
+            spark,
             [(s.url, s.dialect) for s in FIXTURE_SOURCES],
             "url string, dialect string",
         ),

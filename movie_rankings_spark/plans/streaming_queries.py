@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_rankings_spark.catalog import load_table, table_path
+from movie_rankings_spark.catalog import load_table, local_frame, table_path
 from movie_rankings_spark.plans.registry import REGISTRY
 from movie_rankings_spark.scratch import scratch_dir
 from movie_rankings_spark.session import session_conf
@@ -957,7 +957,7 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(bin_.alias("bin"))
         .agg(F.count(F.lit(1)).cast("long").alias("cr"))
     )
-    frame = spark.createDataFrame([(i,) for i in range(20)], "bin int")
+    frame = local_frame(spark, [(i,) for i in range(20)], "bin int")
     filled = (
         frame.join(ref, "bin", "left")
         .join(live, "bin", "left")

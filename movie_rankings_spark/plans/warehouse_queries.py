@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_rankings_spark.catalog import load_table
+from movie_rankings_spark.catalog import load_table, local_frame
 from movie_rankings_spark.operators.attribution import last_touch_attribution
 from movie_rankings_spark.operators.layout import morton_sql, zorder_bucket_stats
 from movie_rankings_spark.operators.scd2 import scd2_history
@@ -503,7 +503,8 @@ def sink_stdout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             continue
         rows.append((int(cells[0]), int(cells[1])))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 len(rows),
@@ -578,7 +579,8 @@ def bloom_semijoin_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         has_bloom = "might_contain" in plan and "bloom_filter_agg" in plan
         audit = joined.collect()[0]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 bool(has_bloom),

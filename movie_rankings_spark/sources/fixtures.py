@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from movie_rankings_spark.catalog import local_frame
+
 SCRAPED_SCHEMA = "url string, rank string, title string"
 
 SRC_A = "src_imdb"
@@ -97,7 +99,7 @@ SCRAPED_ROWS: tuple[tuple[str, str, str], ...] = (
 
 
 def scraped_fixture_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(list(SCRAPED_ROWS), schema=SCRAPED_SCHEMA)
+    return local_frame(spark, list(SCRAPED_ROWS), schema=SCRAPED_SCHEMA)
 
 
 def _sql_quote(s: str) -> str:

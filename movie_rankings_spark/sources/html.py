@@ -40,6 +40,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from movie_rankings_spark.catalog import local_frame
+
 SCRAPED_SCHEMA = "url string, rank string, title string"
 
 _TRAIL_YR = re.compile(r"^(.*?)\s*\(\d{4}\)\s*$")
@@ -257,7 +259,7 @@ def scraped_from_sources(
     callable must be picklable (top-level function / functools.partial).
     """
     unique = sorted({(s.url, s.dialect) for s in sources})
-    src_df = spark.createDataFrame(unique, "url string, dialect string").repartition(
+    src_df = local_frame(spark, unique, "url string, dialect string").repartition(
         max(1, len(unique))
     )
 

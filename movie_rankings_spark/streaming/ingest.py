@@ -23,6 +23,22 @@ instead of adding to it:
 * ``append_stream`` — batch N's rows land in the table's version-N
   directory; the table is the union of all of them.
 
+Every query starts through ``run_available_now``. On a local
+checkpoint (no URI scheme on a local default filesystem, or
+``file:``) it swaps Spark's default checkpoint file manager for the
+FileSystem-based one: the default (FileContext-based) passes an
+explicit permission on every ``mkdir`` and ``create``, and without
+libhadoop's native IO Hadoop's local ``setPermission`` forks a
+``chmod`` process for each, tens per checkpoint (offset and commit
+logs, state-store deltas, their ``.crc`` files). The guarantee is the
+same: both managers write a temp file and rename it into place; on a
+local filesystem FileContext's no-overwrite rename is itself a
+check-then-rename (``AbstractFileSystem.renameInternal`` checks the
+destination, then ``RawLocalFileSystem.rename`` renames), as is the
+FileSystem-based one, and POSIX ``rename(2)`` is atomic. Remote
+schemes (HDFS, object stores) keep the default and its atomic
+overwrite rename.
+
 At 100 TB this is the same job with a cron/Trigger schedule; the only
 sizing knob is ``maxFilesPerTrigger`` (bound the per-batch working
 set) — the checkpoint log scales with file count, not data volume.
@@ -35,11 +51,13 @@ import os
 import shutil
 import tempfile
 from collections.abc import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
 from movie_rankings_spark.caching import release_persisted
+from movie_rankings_spark.session import session_conf
 
 #: landing-zone stages live in the checkout's (git-ignored) .tmp
 _STAGE_ROOT = os.path.join(
@@ -52,12 +70,41 @@ _STAGE_MARKER = "_SOURCE"
 _POINTER = "_CURRENT"
 
 
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def checkpoint_manager(checkpoint_dir: str, default_fs: str) -> str | None:
+    """The checkpoint file manager class for ``checkpoint_dir``: the
+    FileSystem-based one when the path is local (``file:``, or no
+    scheme on a ``file:`` default filesystem), None (Spark's default)
+    for any other scheme."""
+    scheme = urlparse(checkpoint_dir).scheme or urlparse(default_fs).scheme
+    return _FS_MANAGER if scheme in ("", "file") else None
+
+
 def run_available_now(writer: DataStreamWriter, checkpoint_dir: str) -> None:
     """Start ``writer`` with an availableNow trigger on ``checkpoint_dir``
-    and block until everything currently available is processed."""
-    writer.option("checkpointLocation", checkpoint_dir).trigger(
-        availableNow=True
-    ).start().awaitTermination()
+    and block until everything currently available is processed.
+
+    A local checkpoint is written through the FileSystem-based
+    checkpoint file manager (module docstring: without libhadoop,
+    Spark's default forks a ``chmod`` per checkpoint file and
+    directory, and both managers give a local checkpoint the same
+    check-then-rename commit). The conf is scoped to this run; a
+    remote checkpoint keeps Spark's default."""
+    spark = writer._spark
+    default_fs = spark._jsparkSession.sessionState().newHadoopConf().get(
+        "fs.defaultFS", "file:///"
+    )
+    manager = checkpoint_manager(checkpoint_dir, default_fs)
+    with session_conf(spark, {_MANAGER_CONF: manager}):
+        writer.option("checkpointLocation", checkpoint_dir).trigger(
+            availableNow=True
+        ).start().awaitTermination()
 
 
 def ingest_to_parquet(

@@ -26,6 +26,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from movie_rankings_spark.catalog import local_frame
+
 #: schema of one captured microbatch progress record
 PROGRESS_SCHEMA = (
     "query_id string, run_id string, batch_id long, "
@@ -91,8 +93,8 @@ class ProgressCapture(StreamingQueryListener):
         it, alert on it with the same engine."""
         rows = self.records()
         if not rows:
-            return spark.createDataFrame([], PROGRESS_SCHEMA)
-        return spark.createDataFrame(rows, PROGRESS_SCHEMA)
+            return local_frame(spark, [], PROGRESS_SCHEMA)
+        return local_frame(spark, rows, PROGRESS_SCHEMA)
 
 
 def batch_health_summary(progress: DataFrame) -> DataFrame:

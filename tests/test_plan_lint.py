@@ -22,7 +22,12 @@ rules (:func:`audit_plan`):
 The fifth rule, that a Python stage appears only in the queries of
 ``_PYTHON_RESIDENT``, is ``test_plan_shapes.py::
 test_python_stages_only_where_declared``; its allowlist lives here
-with the others.
+with the others. One Python stage never shows in a plan: a frame built
+by ``createDataFrame(<list>)`` reserializes the list in a Python-worker
+job and plans as ``Scan ExistingRDD``, the same leaf a
+``localCheckpoint`` gives. :func:`test_literal_frames_go_through_local_frame`
+therefore reads the source: every literal frame is
+``catalog.local_frame`` (an Arrow ``LocalTableScan``).
 
 Text-plan caveat: cached subtrees and AQE repeat plan text, so a
 finding means "open the plan", not "bug". Each allowlist entry carries
@@ -32,11 +37,14 @@ as soon as an entry no longer excuses anything.
 
 from __future__ import annotations
 
+import ast
 import re
 from collections import Counter
+from pathlib import Path
 
 import pytest
 
+import movie_rankings_spark
 from movie_rankings_spark.plans.all_queries import QUERIES
 
 _BATCH = sorted(n for n in QUERIES if not n.startswith("stream_"))
@@ -533,3 +541,43 @@ def test_strip_initial_plans_dedupes_finalized_aqe_sections():
         ]
     )
     assert count_base_scans(plan) == {"embeddings": 1, "orders": 1}
+
+
+def create_dataframe_calls(source: str, path: str) -> list[str]:
+    """``path:line`` of each ``createDataFrame`` call in ``source``
+    outside ``catalog.local_frame``."""
+    tree = ast.parse(source)
+    allowed: set[int] = set()
+    if path.endswith("movie_rankings_spark/catalog.py"):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                allowed.update(range(node.lineno, node.end_lineno + 1))
+    return [
+        f"{path}:{node.lineno}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+        and node.lineno not in allowed
+    ]
+
+
+def test_literal_frames_go_through_local_frame():
+    """``createDataFrame(<list>)`` costs a Python-worker job per frame
+    and a statistics-free ``LogicalRDD``; build literal frames with
+    ``catalog.local_frame``."""
+    root = Path(movie_rankings_spark.__file__).parent
+    calls = [
+        call
+        for f in sorted(root.rglob("*.py"))
+        for call in create_dataframe_calls(f.read_text(), f.as_posix())
+    ]
+    assert calls == []
+
+
+def test_create_dataframe_calls_rule():
+    call = "def f(spark):\n    return spark.createDataFrame([(1,)], 'x int')\n"
+    assert create_dataframe_calls(call, "pkg/x.py") == ["pkg/x.py:2"]
+    helper = call.replace("def f", "def local_frame")
+    assert create_dataframe_calls(helper, "movie_rankings_spark/catalog.py") == []
+    assert create_dataframe_calls(helper, "movie_rankings_spark/x.py") != []

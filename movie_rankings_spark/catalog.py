@@ -186,9 +186,15 @@ def register_views(
     sf_dir: str,
     fanout_tables: frozenset[str] = frozenset(),
 ) -> None:
-    """Register every table as a temp view for the SQL surface.
-    ``fanout_tables`` opt specific views into the small-scan fan-out
-    (same per-call-site contract as ``load_table``)."""
+    """Register every table as a temp view, for ad-hoc SQL over a
+    session. ``fanout_tables`` opt specific views into the small-scan
+    fan-out (same per-call-site contract as ``load_table``).
+
+    No registered query calls it: the views outlive the call, so the
+    SQL queries bind their tables as ``spark.sql`` frame parameters
+    instead. It stays because perfbench's layer probes wrap it by name
+    (``perfbench/probes.py``), and a missing name breaks traced
+    benchmark runs."""
     for name in TABLES:
         load_table(
             spark, sf_dir, name, fanout=name in fanout_tables

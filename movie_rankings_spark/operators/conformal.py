@@ -42,7 +42,7 @@ def split_conformal_group_median(
     materializations. The training median runs over the persisted
     (group, value) cell table with a per-GROUP window (domain-bounded,
     the A83 cell convention); the conformal quantile reuses
-    weighted_quantiles' bucketed cumulative on the persisted
+    weighted_quantiles' prefix-scan cumulative on the persisted
     calibration score cells (never a SinglePartition window); k and
     n_calib are exact driver-side integers from a bounded collect
     (offset-table convention). Requires n_calib ≥ k (i.e. roughly

@@ -37,6 +37,7 @@ from movie_rankings_spark.functions.vectors import (
     dot_exact,
     norm_sq_exact,
 )
+from movie_rankings_spark.operators.prefix import bucket_count, running_sums
 
 # --- 1. exact ---------------------------------------------------------------
 
@@ -822,7 +823,6 @@ def sorted_neighborhood_pairs(
     window: int = 10,
     threshold: float = 0.5,
     key_len: int = 24,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Sorted-neighborhood dedup (Hernández & Stolfo 1995): sort the
     corpus by a blocking key (normalized text prefix), compare each
@@ -842,9 +842,9 @@ def sorted_neighborhood_pairs(
     1. ``repartitionByRange(key, doc_id)`` range-partitions the corpus
        (sampled bounds, skew-resistant — the "explicit range partition
        whose bounds we control" from shuffle_deterministic's note);
-    2. per-partition ``row_number`` + a |partitions|-row offset table
-       (bounded collect, the zipWithIndex two-pass) yields the exact
-       global rank in (key, doc_id) order — positions are the RANK, so
+    2. the partition id is the bucket of the two-pass prefix scan
+       (operators/prefix.py): a running count of 1 in (key, doc_id)
+       order is the exact global rank — positions are the RANK, so
        the output does not depend on where the sampled bounds landed;
     3. neighbor candidates via a BAND JOIN on floor(pos/window): each
        row joins only its own and the next band (2 bounded probes),
@@ -856,33 +856,20 @@ def sorted_neighborhood_pairs(
     At 100 TB: one range shuffle + one band-key equi-join, both on
     (key-prefix, position) — no skew (positions are unique), no
     Python. Output: doc_lo < doc_hi, jaccard, ordered."""
-    spark = docs.sparkSession
-    n = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
     key = F.substring(
         F.lower(F.regexp_replace(F.col("text"), r"\s+", " ")), 1, key_len
     )
     keyed = docs.select("doc_id", key.alias("_key")).repartitionByRange(
-        n, F.col("_key"), F.col("doc_id")
+        bucket_count(docs.sparkSession), F.col("_key"), F.col("doc_id")
     )
-    # persisted: the counts pass and the numbering pass MUST see the
+    # persisted: the totals pass and the numbering pass MUST see the
     # same sampled range bounds (recomputing repartitionByRange twice
     # is deterministic on identical input, but pinning it is free)
     part = keyed.withColumn("_pid", F.spark_partition_id()).persist_tracked()
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in part.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets, running = [], 0
-    for p in range(n):
-        offsets.append((p, running))
-        running += counts.get(p, 0)
-    off = local_frame(spark, offsets, "_pid int, _offset long")
-    w = Window.partitionBy("_pid").orderBy(F.asc("_key"), F.asc("doc_id"))
-    pos = (
-        part.withColumn("_local", F.row_number().over(w))
-        .join(F.broadcast(off), "_pid")
-        .select("doc_id", (F.col("_offset") + F.col("_local")).alias("pos"))
+    pos, _ = running_sums(
+        part, F.col("_pid"), [F.asc("_key"), F.asc("doc_id")], {"pos": F.lit(1)}
     )
+    pos = pos.select("doc_id", "pos")
     sets = shingle_sets(docs).join(pos, "doc_id")
     a = sets.select(
         F.col("doc_id").alias("id_a"),

@@ -22,9 +22,8 @@ Why these, next to the existing drift/anomaly family:
 Exactness contract (the gini/quantile_rank_map conventions):
 - both tests reduce the fact to the DISTINCT-VALUE count table with
   per-group tallies (one map-side-combined shuffle);
-- exact cumulative counts over that table come from the bucketed
-  two-pass (per-bucket windows + driver-prefix-summed offsets at
-  `statistics.quantile_rank_map`) — never an Exchange
+- exact cumulative counts over that table come from the two-pass
+  prefix scan of operators/prefix.py — never an Exchange
   SinglePartition window and never a value-domain theta join (the
   roc_curve pattern is for DOMAIN-bounded values; price-like columns
   have ~N distinct values and would make that join quadratic);
@@ -47,22 +46,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from movie_rankings_spark.catalog import local_frame
+from movie_rankings_spark.operators.prefix import running_sums, sketch_bucket
 
 
 def _bucketed_cum2(
-    df: DataFrame,
-    value_col: str,
-    a_ind: Column,
-    b_ind: Column,
-    buckets: int | None = None,
+    df: DataFrame, value_col: str, a_ind: Column, b_ind: Column
 ) -> tuple[DataFrame, int, int]:
     """Distinct-value table (v, ca, cb, cum_a, cum_b) with EXACT
     inclusive cumulative per-group counts over v ascending, without a
-    global sort: approx_percentile bounds place values into contiguous
-    buckets (placement is heuristic, every count below is exact),
-    per-bucket windows run in parallel, and a ≤ buckets-row collect
-    prefix-sums the per-bucket/per-group offsets on the driver —
-    quantile_rank_map's two-pass, carried for two groups at once.
+    global sort: the two-pass scan of operators/prefix.py over the
+    persisted distinct-value table, carrying both groups at once.
 
     NULL values of value_col are EXCLUDED (they have no place on the
     real line, and NULLS FIRST in the per-bucket window would
@@ -70,22 +63,16 @@ def _bucketed_cum2(
     contract spearman_rho and ks_group_vs_rest already enforce.
 
     Returns (cum_df, n_a, n_b); the totals are driver-known (they
-    fall out of the offsets collect) so callers embed them as
+    fall out of the totals collect) so callers embed them as
     literals instead of re-aggregating.
     """
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    n = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = max(1, min(int(n), 4096))
-
     rows = df.select(
         F.col(value_col).cast("long").alias("v"),
         a_ind.cast("long").alias("_a"),
         b_ind.cast("long").alias("_b"),
     ).filter(((F.col("_a") + F.col("_b")) > 0) & F.col("v").isNotNull())
     # the ONLY fact-sized pass: materialized into the persisted
-    # distinct-value table; bounds/totals/final all read the cache
+    # distinct-value table; sketch/totals/final all read the cache
     vc = (
         rows.groupBy("v")
         .agg(
@@ -94,57 +81,13 @@ def _bucketed_cum2(
         )
         .persist_tracked()
     )
-    if n > 1:
-        # unweighted percentiles of the distinct values: the per-bucket
-        # windows run over vc ROWS, so balancing |V| per bucket (not row
-        # mass) is the right load balance — and it reads the cache, not
-        # the fact. Placement is heuristic; every count below is exact.
-        bounds = vc.agg(
-            F.percentile_approx(
-                "v", F.lit([i / n for i in range(1, n)]), F.lit(10_000)
-            ).alias("b")
-        ).collect()[0]["b"]
-    else:
-        bounds = []
-    bounds = sorted(set(bounds or []))
-    bucket = (
-        F.size(F.filter(F.lit(bounds), lambda b: F.col("v") > b))
-        if bounds
-        else F.lit(0)
+    cum, totals = running_sums(
+        vc,
+        sketch_bucket(vc, "v"),
+        ["v"],
+        {"cum_a": F.col("ca"), "cum_b": F.col("cb")},
     )
-    vb = vc.withColumn("_bucket", bucket)
-    totals = {
-        r["_bucket"]: (r["ta"], r["tb"])
-        for r in vb.groupBy("_bucket")
-        .agg(F.sum("ca").alias("ta"), F.sum("cb").alias("tb"))
-        .collect()
-    }
-    offsets, run_a, run_b = [], 0, 0
-    for b in range(len(bounds) + 1):
-        offsets.append((b, run_a, run_b))
-        ta, tb = totals.get(b, (0, 0))
-        run_a += ta
-        run_b += tb
-    off = local_frame(
-        spark,
-        offsets, "_bucket int, _off_a long, _off_b long"
-    )
-    w = Window.partitionBy("_bucket").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = (
-        vb.withColumn("_ra", F.sum("ca").over(w))
-        .withColumn("_rb", F.sum("cb").over(w))
-        .join(F.broadcast(off), "_bucket")
-        .select(
-            "v",
-            "ca",
-            "cb",
-            (F.col("_off_a") + F.col("_ra")).cast("long").alias("cum_a"),
-            (F.col("_off_b") + F.col("_rb")).cast("long").alias("cum_b"),
-        )
-    )
-    return cum, int(run_a), int(run_b)
+    return cum, totals["cum_a"], totals["cum_b"]
 
 
 def ks_two_sample(
@@ -301,8 +244,8 @@ def spearman_rho(df: DataFrame, col_a: Column, col_b: Column) -> DataFrame:
 
     Shape: the fact reduces ONCE to the distinct-(a, b) pair table
     (map-side combined, persisted); per-variable midranks come from
-    the same bucketed-cumulative machinery as ks_two_sample over that
-    cached table (never a global-sort window); rank maps equi-join
+    the same prefix-scan cumulative (_bucketed_cum2) as ks_two_sample
+    over that cached table (never a global-sort window); rank maps equi-join
     back onto the pair table.
 
     Exactness: midranks are doubled to stay integral (r2 = 2·cumlt +

@@ -117,15 +117,18 @@ def kcore_oracle_sql(k: int, n_rounds: int, edges_cte: str) -> str:
     """Unrolled DuckDB twin of ``n_rounds`` peels over the edge list
     produced by ``edges_cte`` (a WITH body defining relation ``e``
     with columns src, dst — both directions). Output matches
-    core_size_histogram over kcore(): (core_degree, n_nodes)."""
-    parts = [f"WITH {edges_cte},\ne0 AS (SELECT src, dst FROM e)"]
+    core_size_histogram over kcore(): (core_degree, n_nodes). Every
+    round's CTEs are MATERIALIZED: each e{r} is read twice by the
+    next round, and DuckDB's inlining would otherwise expand 2^rounds
+    copies of the edge build."""
+    parts = [f"WITH {edges_cte},\ne0 AS MATERIALIZED (SELECT src, dst FROM e)"]
     for r in range(1, n_rounds + 1):
         parts.append(
             f""",
-k{r} AS (
+k{r} AS MATERIALIZED (
   SELECT src FROM e{r - 1} GROUP BY src HAVING COUNT(*) >= {k}
 ),
-e{r} AS (
+e{r} AS MATERIALIZED (
   SELECT t.src, t.dst FROM e{r - 1} t
   WHERE t.src IN (SELECT src FROM k{r})
     AND t.dst IN (SELECT src FROM k{r})

@@ -11,17 +11,19 @@ equals the max y at its own x — which needs only a prefix-max over
 x-ascending groups.
 
 A bare ``Window.orderBy(x)`` would plan Exchange SinglePartition, so
-the prefix-max runs as the repo's bucketed two-pass
-(operators/statistics.py::quantile_rank_map convention):
+the prefix-max runs over the bucket placement of operators/prefix.py:
 
 1. collapse to per-x group maxima — one map-side-combinable groupBy
-   (|distinct x| rows, the only data the frontier math ever touches);
-2. approx_percentile bounds place bucket boundaries over x (the
+   (|distinct x| rows, the only data the frontier math ever touches),
+   persisted;
+2. ``sketch_bucket`` places contiguous x ranges over that table (the
    sketch only PLACES boundaries — dominance below stays exact);
 3. within-bucket prefix max via a window PARTITIONED by bucket, plus
    driver prefix-max over the ≤ |buckets| per-bucket maxima,
    broadcast back — exact global "max y at strictly smaller x" for
-   every group, fully parallel;
+   every group, fully parallel. This max loop is skyline's own: it
+   needs an EXCLUSIVE prefix-max, which no inclusive running sum of
+   ``prefix.running_sums`` yields;
 4. one join back to the fact keeps every row (ties included) whose
    (x, y) sits on the frontier.
 
@@ -37,14 +39,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from movie_rankings_spark.catalog import local_frame
+from movie_rankings_spark.operators.prefix import sketch_bucket
 
 
-def skyline_2d(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    buckets: int | None = None,
-) -> DataFrame:
+def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """All rows of ``df`` on the (min x, max y) Pareto frontier —
     duplicates and x/y ties that are merely EQUAL (not dominated)
     are kept, matching the NOT-EXISTS semantics.
@@ -57,40 +55,21 @@ def skyline_2d(
     both sides makes the contract identical on both engines."""
     spark = df.sparkSession
     df = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
-    n = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = max(1, min(int(n), 4096))
-
-    g = df.groupBy(F.col(x_col).alias("_sk_x")).agg(
-        F.max(F.col(y_col)).alias("_sk_gy")
+    g = (
+        df.groupBy(F.col(x_col).alias("_sk_x"))
+        .agg(F.max(F.col(y_col)).alias("_sk_gy"))
+        .persist_tracked()  # sketch + bucket maxima + frontier read this
     )
-    if n > 1:
-        bounds = df.agg(
-            F.percentile_approx(
-                x_col, F.lit([i / n for i in range(1, n)]), F.lit(10_000)
-            ).alias("b")
-        ).collect()[0]["b"]
-    else:
-        bounds = []
-    bounds = sorted(set(bounds or []))
-    # no boundaries (single bucket / constant column) -> everything in
-    # bucket 0, matching the offsets loop below (a [-inf] sentinel
-    # would send every row to bucket 1 and the join would drop them)
-    bucket = (
-        F.size(F.filter(F.lit(bounds), lambda b: F.col("_sk_x") > b))
-        if bounds
-        else F.lit(0)
-    )
-    gb = g.withColumn("_bucket", bucket).persist_tracked()
+    gb = g.withColumn("_bucket", sketch_bucket(g, "_sk_x"))
     # per-bucket max gy, prefix-maxed on the driver (≤ n rows)
     bmax = {
         r["_bucket"]: r["m"]
         for r in gb.groupBy("_bucket").agg(F.max("_sk_gy").alias("m")).collect()
     }
     prefix, best = [], None
-    for b in range(len(bounds) + 1):
+    for b, cur in sorted(bmax.items()):
         prefix.append((b, best))
-        cur = bmax.get(b)
-        if cur is not None and (best is None or cur > best):
+        if best is None or cur > best:
             best = cur
     off = local_frame(
         spark,
@@ -108,9 +87,9 @@ def skyline_2d(
         .filter(F.col("_pmax").isNull() | (F.col("_sk_gy") > F.col("_pmax")))
         .select("_sk_x", "_sk_gy")
     )
-    # gb stays cached until the action: the plan above consumes it in
-    # two branches (driver bmax + the frontier filter) and the final
-    # join executes lazily after this returns
+    # g stays cached until the action: the plan above consumes it in
+    # three branches (sketch, driver bmax, the frontier filter) and the
+    # final join executes lazily after this returns
     return df.join(
         frontier,
         (df[x_col] == frontier["_sk_x"]) & (df[y_col] == frontier["_sk_gy"]),

@@ -19,9 +19,9 @@ Scale posture:
   partitioned windows over it and the grand total is a 1-row
   broadcast scalar (cells ≈ |row domain| × |col domain| —
   data-independent). The 100 TB fact table is scanned exactly once.
-* ``quantile_rank_map`` is the global-rank transform computed by the
-  bucketed two-pass (sketch bounds + exact per-bucket cumulatives) —
-  never an Exchange SinglePartition.
+* ``quantile_rank_map``, ``gini_exact`` and ``weighted_quantiles``
+  rank over the distinct-value table with the two-pass prefix scan of
+  operators/prefix.py — never an Exchange SinglePartition.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from movie_rankings_spark.catalog import local_frame
+from movie_rankings_spark.operators.prefix import running_sums, sketch_bucket
 
 
 def grouped_ols(
@@ -155,80 +156,33 @@ def chi2_contingency(
     )
 
 
-def quantile_rank_map(
-    df: DataFrame, value_col: str, buckets: int | None = None
-) -> DataFrame:
+def quantile_rank_map(df: DataFrame, value_col: str) -> DataFrame:
     """Global quantile normalization WITHOUT a global sort: the map
     value → percent-rank ``(rows strictly below) / (N − 1)`` — the
     rank-based feature transform (quantile normalization, copula
     features, drift-stable scaling). Joining this (distinct-value-
     sized) map back to the fact normalizes every row.
 
-    A bare ``Window.orderBy(value)`` would plan Exchange
-    SinglePartition; instead the shuffle_deterministic two-pass:
-
-    1. distinct-value counts (one shuffle, map-side combined);
-    2. approx_percentile bounds split values into `buckets` contiguous
-       ranges (the sketch only PLACES bucket boundaries — every rank
-       below is exact);
-    3. per-bucket cumulative counts (windows partitioned by bucket) +
-       driver prefix-summed bucket offsets (≤ buckets rows collected)
-       give the exact global min-rank of every value in parallel.
+    The fact reduces once to the persisted distinct-value counts; the
+    exact min-rank of every value is its inclusive cumulative count
+    minus its own, from the two-pass scan of operators/prefix.py.
 
     Output: value, n_rows (ties), pct ∈ [0, 1]."""
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    n = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = max(1, min(int(n), 4096))
-
-    vc = df.groupBy(F.col(value_col).alias("v")).agg(
-        F.count(F.lit(1)).alias("c")
+    vc = (
+        df.groupBy(F.col(value_col).alias("v"))
+        .agg(F.count(F.lit(1)).alias("c"))
+        .persist_tracked()  # sketch + totals + windows read this
     )
-    if n > 1:
-        bounds = df.agg(
-            F.percentile_approx(
-                value_col, F.lit([i / n for i in range(1, n)]), F.lit(10_000)
-            ).alias("b")
-        ).collect()[0]["b"]
-    else:
-        bounds = []
-    bounds = sorted(set(bounds or []))
-    # empty bounds (single bucket / shuffle.partitions=1): bucket 0
-    # for every row, consistent with the offsets loop — the old [-inf]
-    # sentinel sent rows to bucket 1, which the offsets table lacks
-    # (the gini_exact r3 fix, applied here too)
-    bucket = (
-        F.size(F.filter(F.lit(bounds), lambda b: F.col("v") > b))
-        if bounds
-        else F.lit(0)
+    cum, totals = running_sums(
+        vc, sketch_bucket(vc, "v"), ["v"], {"_cum": F.col("c")}
     )
-    vb = vc.withColumn("_bucket", bucket)
-    totals = {
-        r["_bucket"]: r["t"]
-        for r in vb.groupBy("_bucket").agg(F.sum("c").alias("t")).collect()
-    }
-    offsets, running = [], 0
-    for b in range(len(bounds) + 1):
-        offsets.append((b, running))
-        running += totals.get(b, 0)
-    grand_n = running
-    off = local_frame(spark, offsets, "_bucket int, _offset long")
-    w = Window.partitionBy("_bucket").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    denom = float(max(grand_n - 1, 1))
-    return (
-        vb.withColumn("_cum", F.sum("c").over(w))
-        .join(F.broadcast(off), "_bucket")
-        .select(
-            F.col("v").alias("value"),
-            F.col("c").alias("n_rows"),
-            (
-                (F.col("_offset") + F.col("_cum") - F.col("c")).cast("double")
-                / F.lit(denom)
-            ).alias("pct"),
-        )
+    denom = float(max(totals["_cum"] - 1, 1))
+    return cum.select(
+        F.col("v").alias("value"),
+        F.col("c").alias("n_rows"),
+        ((F.col("_cum") - F.col("c")).cast("double") / F.lit(denom)).alias(
+            "pct"
+        ),
     )
 
 
@@ -298,60 +252,20 @@ def gini_exact(df: DataFrame, value_col: str) -> DataFrame:
     From the rank identity G = 2·Σᵢ i·x₍ᵢ₎ / (n·Σx) − (n+1)/n over the
     ascending sort, a TIE GROUP of value v with c rows and r rows
     strictly below contributes v·(c·r + c(c+1)/2) to Σ i·x₍ᵢ₎ — so the
-    whole statistic reduces over the DISTINCT-VALUE table with exact
-    min-ranks, which the quantile_rank_map bucketing already computes
-    scalably (sketch-placed contiguous buckets, per-bucket cumulative
-    counts, driver prefix-sum of ≤buckets offsets — never an Exchange
-    SinglePartition).
+    whole statistic reduces over the persisted DISTINCT-VALUE table
+    with exact min-ranks from the two-pass scan of operators/prefix.py.
 
     Input contract: value_col is an exact DECIMAL. Output: one row —
     n_values, total (double), gini (double)."""
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    n_b = max(
-        1, min(int(spark.conf.get("spark.sql.shuffle.partitions")), 4096)
+    vc = (
+        df.groupBy(F.col(value_col).alias("v"))
+        .agg(F.count(F.lit(1)).alias("c"))
+        .persist_tracked()  # sketch + totals + windows read this
     )
-    vc = df.groupBy(F.col(value_col).alias("v")).agg(
-        F.count(F.lit(1)).alias("c")
+    cum, _ = running_sums(
+        vc, sketch_bucket(vc, "v"), ["v"], {"_cum": F.col("c")}
     )
-    if n_b > 1:
-        bounds = df.agg(
-            F.percentile_approx(
-                value_col,
-                F.lit([i / n_b for i in range(1, n_b)]),
-                F.lit(10_000),
-            ).alias("b")
-        ).collect()[0]["b"]
-        bounds = sorted(set(float(b) for b in (bounds or [])))
-    else:
-        bounds = []
-    if bounds:
-        vb = vc.withColumn(
-            "_bucket",
-            F.size(F.filter(F.lit(bounds), lambda b: F.col("v") > b)),
-        )
-    else:
-        # single-bucket degenerate case (shuffle.partitions=1 or empty
-        # input): bucket 0 so the offsets table below still covers it
-        vb = vc.withColumn("_bucket", F.lit(0))
-    totals = {
-        r["_bucket"]: r["t"]
-        for r in vb.groupBy("_bucket").agg(F.sum("c").alias("t")).collect()
-    }
-    offsets, running = [], 0
-    for b in range(len(bounds) + 1):
-        offsets.append((b, running))
-        running += totals.get(b, 0)
-    off = local_frame(spark, offsets, "_bucket int, _offset long")
-    w = Window.partitionBy("_bucket").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ranked = (
-        vb.withColumn("_cum", F.sum("c").over(w))
-        .join(F.broadcast(off), "_bucket")
-        .withColumn("_r", F.col("_offset") + F.col("_cum") - F.col("c"))
-    )
+    ranked = cum.withColumn("_r", F.col("_cum") - F.col("c"))
     # rank-weight per tie group: c*r + c(c+1)/2 in DECIMAL end to end
     # (long products overflow at c·r > 9.2e18; a double intermediate
     # loses exactness past 2^53). c·(c+1) is always even so the /2 at
@@ -510,7 +424,6 @@ def weighted_quantiles(
     value_col,
     weight_col,
     quantiles: tuple = ((25, 100), (50, 100), (75, 100)),
-    buckets: int | None = None,
 ) -> DataFrame:
     """Exact WEIGHTED quantiles without a global sort — "the price
     below which half the shipped QUANTITY sits", the inventory /
@@ -523,69 +436,27 @@ def weighted_quantiles(
     weighted quantile, compared by integer cross-multiplication in
     both engines.
 
-    Shape: the quantile_rank_map two-pass, cumulating WEIGHT instead
-    of row count — distinct-value weight table (one map-side-combined
-    shuffle), approx_percentile bounds place buckets (placement
-    heuristic, every weight below exact), per-bucket windows +
-    driver-prefix-summed offsets give exact global cumw in parallel;
-    all requested quantiles then reduce the |V|-row cum table in one
-    aggregate. Never an Exchange SinglePartition window.
+    Shape: one map-side-combined shuffle to the persisted
+    distinct-value weight table; the two-pass scan of
+    operators/prefix.py gives its exact global cumulative weight, and
+    all requested quantiles then reduce that |V|-row table in one
+    aggregate.
 
     Output: one row per quantile — q_num, q_den, value, cum_weight,
     total_weight, ordered by q_num/q_den ascending.
     """
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    n = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = max(1, min(int(n), 4096))
-
     rows = df.select(
         value_col.cast("long").alias("v"), weight_col.cast("long").alias("w")
     ).filter(F.col("v").isNotNull() & F.col("w").isNotNull())
     vc = (
         rows.groupBy("v")
         .agg(F.sum("w").cast("long").alias("ws"))
-        .persist_tracked()  # bounds + bucket totals + windows read this
+        .persist_tracked()  # sketch + totals + windows read this
     )
-    if n > 1:
-        bounds = vc.agg(
-            F.percentile_approx(
-                "v", F.lit([i / n for i in range(1, n)]), F.lit(10_000)
-            ).alias("b")
-        ).collect()[0]["b"]
-    else:
-        bounds = []
-    bounds = sorted(set(bounds or []))
-    bucket = (
-        F.size(F.filter(F.lit(bounds), lambda b: F.col("v") > b))
-        if bounds
-        else F.lit(0)
+    cum, totals = running_sums(
+        vc, sketch_bucket(vc, "v"), ["v"], {"cumw": F.col("ws")}
     )
-    vb = vc.withColumn("_bucket", bucket)
-    totals = {
-        r["_bucket"]: r["t"]
-        for r in vb.groupBy("_bucket")
-        .agg(F.sum("ws").cast("long").alias("t"))
-        .collect()
-    }
-    offsets, running = [], 0
-    for b in range(len(bounds) + 1):
-        offsets.append((b, running))
-        running += totals.get(b, 0)
-    total_w = running
-    off = local_frame(spark, offsets, "_bucket int, _offset long")
-    w = Window.partitionBy("_bucket").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = (
-        vb.withColumn("_cw", F.sum("ws").over(w))
-        .join(F.broadcast(off), "_bucket")
-        .select(
-            "v",
-            (F.col("_offset") + F.col("_cw")).cast("long").alias("cumw"),
-        )
-    )
+    total_w = totals["cumw"]
     picks = [
         F.min(
             F.when(

@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from movie_rankings_spark.catalog import local_frame
 from movie_rankings_spark.functions.text import (
     LANG_ORDER,
     bpe_token_count,
@@ -22,6 +21,7 @@ from movie_rankings_spark.functions.text import (
     stopword_hits,
     words,
 )
+from movie_rankings_spark.operators.prefix import bucket_count, running_sums
 
 
 def doc_stats(docs: DataFrame) -> DataFrame:
@@ -232,68 +232,33 @@ def doc_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def shuffle_deterministic(docs: DataFrame, buckets: int | None = None) -> DataFrame:
+def shuffle_deterministic(docs: DataFrame) -> DataFrame:
     """Reproducible pseudo-random training order: sort by md5(doc_id).
     Engine-portable (any system recomputes the same permutation) — no
     RNG state, no seed bookkeeping across retries.
 
-    The global ordinal is computed WITHOUT a global sort (a bare
-    ``Window.orderBy`` would plan as ``Exchange SinglePartition`` and
-    funnel the whole corpus through one task). Instead, the classic
-    zipWithIndex two-pass, kept in DataFrame land:
-
-    1. bucket each row by its md5-prefix — ``floor(prefix16 * n /
-       65536)`` is monotone in the key, so buckets are contiguous key
-       ranges (an explicit repartitionByRange whose bounds we control);
-    2. one tiny job counts rows per bucket (partial agg, n rows to the
-       driver) and prefix-sums them into bucket offsets;
-    3. ``position = offset[bucket] + row_number() over (bucket)`` —
-       one hash-partition shuffle on the bucket id, every bucket
-       numbered in parallel.
-
-    md5 keys are uniform, so buckets are balanced at any scale; pass
-    ``buckets`` ~ cluster cores at 100 TB. Output: position (bigint),
-    doc_id, shuffle_key."""
-    from pyspark.sql import Window
-
-    spark = docs.sparkSession
-    n = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = max(1, min(int(n), 65536))
-
-    key = F.md5(F.col("doc_id").cast("string"))
-    keyed = docs.select("doc_id", key.alias("shuffle_key")).withColumn(
-        "_bucket",
-        F.floor(
-            F.conv(F.substring("shuffle_key", 1, 4), 16, 10).cast("long")
-            * F.lit(n)
-            / F.lit(65536)
-        ).cast("int"),
+    The global ordinal is a running count of 1 under the total order
+    (shuffle_key, doc_id), from the two-pass scan of
+    operators/prefix.py. Its buckets need no sketch: md5 keys are
+    uniform, so ``floor(prefix16 * n / 65536)`` is monotone in the key
+    and balanced at any scale. Output: position (bigint), doc_id,
+    shuffle_key."""
+    n = bucket_count(docs.sparkSession)
+    keyed = docs.select(
+        "doc_id", F.md5(F.col("doc_id").cast("string")).alias("shuffle_key")
     )
-
-    counts = {
-        row["_bucket"]: row["cnt"]
-        for row in keyed.groupBy("_bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    offsets, running = [], 0
-    for b in range(n):
-        offsets.append((b, running))
-        running += counts.get(b, 0)
-    off = local_frame(spark, offsets, "_bucket int, _offset long")
-
-    w = Window.partitionBy("_bucket").orderBy(
-        F.col("shuffle_key").asc(), F.col("doc_id").asc()
+    bucket = F.floor(
+        F.conv(F.substring("shuffle_key", 1, 4), 16, 10).cast("long")
+        * F.lit(n)
+        / F.lit(65536)
     )
-    return (
-        keyed.withColumn("_local", F.row_number().over(w))
-        .join(F.broadcast(off), "_bucket")
-        .select(
-            (F.col("_offset") + F.col("_local")).alias("position"),
-            "doc_id",
-            "shuffle_key",
-        )
+    pos, _ = running_sums(
+        keyed,
+        bucket,
+        [F.col("shuffle_key").asc(), F.col("doc_id").asc()],
+        {"position": F.lit(1)},
     )
+    return pos.select("position", "doc_id", "shuffle_key")
 
 
 def pack_documents(
@@ -716,7 +681,7 @@ def collocation_lift(docs: DataFrame, k: int = 20, min_count: int = 5) -> DataFr
     )
 
 
-def curriculum_order(docs: DataFrame, buckets: int | None = None) -> DataFrame:
+def curriculum_order(docs: DataFrame) -> DataFrame:
     """Curriculum training order: documents scheduled easy→hard by
     length decile (token count), pseudo-randomly shuffled WITHIN each
     decile (md5 key) — the standard length-curriculum schedule, fully
@@ -724,16 +689,10 @@ def curriculum_order(docs: DataFrame, buckets: int | None = None) -> DataFrame:
 
     Deciles come from exact percentile thresholds (a 1-row aggregate,
     collected like any loop scalar — never a Window-over-()); the
-    global ordinal uses the same two-pass bucketed zipWithIndex as
-    shuffle_deterministic, with a composite (decile, md5-prefix)
-    bucket so no Exchange SinglePartition appears at any size.
+    global ordinal is shuffle_deterministic's running count, with a
+    composite (decile, md5-prefix) bucket.
     Output: position, doc_id, decile, n_tokens."""
-    from pyspark.sql import Window
-
-    spark = docs.sparkSession
-    nb = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nb = max(1, min(int(nb), 4096))
-
+    nb = bucket_count(docs.sparkSession)
     scored = docs.select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
@@ -746,39 +705,19 @@ def curriculum_order(docs: DataFrame, buckets: int | None = None) -> DataFrame:
     decile = F.lit(1)
     for t in thresholds:
         decile = decile + F.when(F.col("n_tokens") > t, 1).otherwise(0)
-    keyed = scored.withColumn("decile", decile.cast("long")).withColumn(
-        "_bucket",
-        (
-            (F.col("decile") - 1) * nb
-            + F.floor(
-                F.conv(F.substring("k", 1, 4), 16, 10).cast("long")
-                * F.lit(nb)
-                / F.lit(65536)
-            )
-        ).cast("int"),
+    keyed = scored.withColumn("decile", decile.cast("long"))
+    bucket = (F.col("decile") - 1) * nb + F.floor(
+        F.conv(F.substring("k", 1, 4), 16, 10).cast("long")
+        * F.lit(nb)
+        / F.lit(65536)
     )
-    counts = {
-        r["_bucket"]: r["cnt"]
-        for r in keyed.groupBy("_bucket").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets, running = [], 0
-    for b in range(10 * nb):
-        offsets.append((b, running))
-        running += counts.get(b, 0)
-    off = local_frame(spark, offsets, "_bucket int, _offset long")
-    w = Window.partitionBy("_bucket").orderBy(
-        F.col("k").asc(), F.col("doc_id").asc()
+    pos, _ = running_sums(
+        keyed,
+        bucket,
+        [F.col("k").asc(), F.col("doc_id").asc()],
+        {"position": F.lit(1)},
     )
-    return (
-        keyed.withColumn("_local", F.row_number().over(w))
-        .join(F.broadcast(off), "_bucket")
-        .select(
-            (F.col("_offset") + F.col("_local")).alias("position"),
-            "doc_id",
-            "decile",
-            "n_tokens",
-        )
-    )
+    return pos.select("position", "doc_id", "decile", "n_tokens")
 
 
 def quality_filtered_per_group(

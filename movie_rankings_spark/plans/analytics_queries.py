@@ -394,14 +394,13 @@ FROM t ORDER BY value
 def quantile_normalize_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global percent-rank map for o_totalprice (operators/statistics
     .py::quantile_rank_map): the rank-based normalization computed by
-    sketch-bounded buckets + exact per-bucket cumulative counts +
-    driver offset prefix sums — never an Exchange SinglePartition
-    (the DuckDB twin's global window is the semantics, not the
-    plan)."""
+    the two-pass prefix scan of operators/prefix.py — never an
+    Exchange SinglePartition (the DuckDB twin's global window is the
+    semantics, not the plan)."""
     from movie_rankings_spark.operators.statistics import quantile_rank_map
 
     return quantile_rank_map(
-        _t(spark, sf_dir, "orders"), "o_totalprice", buckets=32
+        _t(spark, sf_dir, "orders"), "o_totalprice"
     ).orderBy("value")
 
 
@@ -929,8 +928,8 @@ def gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Gini coefficient of per-customer revenue
     (operators/statistics.py::gini_exact) — the concentration metric
     behind "whale" analyses, computed WITHOUT a global sort: tie
-    groups over the distinct-value table with bucketed exact
-    min-ranks reduce the rank identity distributively (the
+    groups over the distinct-value table with exact min-ranks
+    (operators/prefix.py) reduce the rank identity distributively (the
     quantile-normalization machinery re-used for an economics
     statistic). The oracle's global ROW_NUMBER form is the
     small-scale verifier; tie order doesn't change Σ rn·x because
@@ -1254,7 +1253,7 @@ def ks_price_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fact reduces once to the distinct-cents count table (~N
     distinct values — exactly the regime where roc_curve's theta join
     would go quadratic); exact cumulative counts come from the
-    bucketed per-bucket-window + driver-offset two-pass, never a
+    two-pass prefix scan of operators/prefix.py, never a
     global-sort window. d_num is an exact BIGINT cross-product;
     ks_d is one IEEE division (operators/disttests.py::ks_two_sample).
     """
@@ -1318,7 +1317,7 @@ def mannwhitney_price_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rank-based alternative to a t-test, over the same 1-URGENT
     vs 5-LOW split as ks_price_priority.
 
-    Same single-shuffle distinct-value reduction and bucketed
+    Same single-shuffle distinct-value reduction and prefix-scan
     cumulative as the KS test; U and the tie term are exact BIGINTs,
     rank_biserial/z are IEEE expressions of those integers mirrored
     verbatim in the oracle
@@ -1451,8 +1450,8 @@ def spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     number reported when a scatter plot would mislead.
 
     The fact reduces once to the distinct-(qty, cents) pair table;
-    midranks come from the bucketed-cumulative machinery over that
-    cached table; the centered moments are exact DECIMAL(38,0)
+    midranks come from the prefix scan (operators/prefix.py) over
+    that cached table; the centered moments are exact DECIMAL(38,0)
     integers so the near-cancelling differences lose no precision
     (operators/disttests.py::spearman_rho).
     """
@@ -1993,7 +1992,7 @@ def weighted_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory-mass view that the unweighted percentiles_lineitem_price
     misstates wherever quantity correlates with price. Exact
     left-continuous weighted quantiles by integer cross-
-    multiplication, bucketed two-pass cumulative — never a global
+    multiplication, two-pass prefix-scan cumulative — never a global
     sort (operators/statistics.py::weighted_quantiles)."""
     from movie_rankings_spark.operators.statistics import weighted_quantiles
 

@@ -243,7 +243,7 @@ def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core of the co-purchase graph (operators/kcore.py): 6 peel
     rounds at k=8, reported as the (core_degree, n_nodes) histogram.
     Pure integer peeling ⇒ the unrolled DuckDB twin hash-matches; the
-    fixed point at the shipped SFs is pinned in tests/test_kcore.py
+    fixed point at the shipped SFs is pinned in tests/test_frontier4b.py
     (kcore.converged)."""
     edges = copurchase_edges(_t(spark, sf_dir, "lineitem", fanout=True))
     core = kcore(edges, k=_KCORE_K, n_rounds=_KCORE_ROUNDS)
@@ -294,7 +294,7 @@ _SN_THRESHOLD = 0.5
 def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood dedup blocking (operators/dedup.py):
     range-partition by normalized-prefix key, exact global rank via
-    the zipWithIndex two-pass (no SinglePartition window), band-join
+    the two-pass prefix scan (no SinglePartition window), band-join
     candidates within a 10-position window, exact 3-gram Jaccard
     verify at 0.5. The deterministic-cost complement to MinHash-LSH;
     position semantics are replicated exactly by the oracle's

@@ -408,8 +408,8 @@ def curriculum_order_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-curriculum training order (textops.curriculum_order):
     easy→hard by token-count decile, md5-shuffled within decile.
     Deciles from exact percentile thresholds (1-row aggregate); the
-    global ordinal is the bucketed two-pass zipWithIndex over a
-    composite (decile, md5-prefix) bucket — no Exchange
+    global ordinal is the two-pass prefix scan (operators/prefix.py)
+    over a composite (decile, md5-prefix) bucket — no Exchange
     SinglePartition at any scale (plan-pinned)."""
     return (
         textops.curriculum_order(_docs(spark, sf_dir))

@@ -1961,11 +1961,13 @@ def hierarchy_rollup_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the base — frontier-sized shuffles, the same per-round
     shape as connected-components. Spark currently supports UNION ALL
     recursion only (acyclic inputs; cyclic closure stays with the
-    iterative CC operators)."""
-    from movie_rankings_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_HIERARCHY_ORACLE)
+    iterative CC operators). The customer table binds as a
+    ``spark.sql`` frame parameter in place of the oracle's
+    ``FROM customer``, so no temp view outlives the call."""
+    return spark.sql(
+        _HIERARCHY_ORACLE.replace("FROM customer", "FROM {customer}"),
+        customer=_t(spark, sf_dir, "customer"),
+    )
 
 
 # --- leakage-safe temporal split with embargo (r3s4) ------------------------

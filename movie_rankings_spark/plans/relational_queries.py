@@ -556,14 +556,15 @@ def orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REGISTRY.register("sql_api_pricing_summary", _Q1_ORACLE)
 def sql_api_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL API surface: the DuckDB oracle text IS the Spark query.
-    Tables register as temp views (catalog.register_views) and the
-    identical ANSI string runs through spark.sql — Catalyst compiles
-    it to the same physical plan as the DataFrame form of Q1, which
-    is the point: both front-ends meet in the same optimizer."""
-    from movie_rankings_spark.catalog import register_views
-
-    register_views(spark, sf_dir, fanout_tables=frozenset({"lineitem"}))
-    return spark.sql(_Q1_ORACLE)
+    The one table binds as a ``spark.sql`` frame parameter in place of
+    the oracle's ``FROM lineitem``, so no temp view outlives the call,
+    and the same ANSI string runs through spark.sql — Catalyst
+    compiles it to the same physical plan as the DataFrame form of Q1,
+    which is the point: both front-ends meet in the same optimizer."""
+    return spark.sql(
+        _Q1_ORACLE.replace("FROM lineitem", "FROM {lineitem}"),
+        lineitem=_t(spark, sf_dir, "lineitem", fanout=True),
+    )
 
 
 _BITMAP_ROLLUP_ORACLE = """

@@ -28,26 +28,32 @@ def sf_dir():
 def built_query(spark, sf_dir):
     """Each registered query built once per session at ``sf_dir``:
     name -> (output schema, simple physical plan; None for ``stream_*``
-    queries, whose build runs a whole stream). The registry-wide
-    compile, plan and schema lints share it, so Tier-1 builds each
-    query once for all of them. Each build's persisted intermediates
-    are released once its plan is captured, so no query's cached
-    fragment rewrites a later query's plan."""
+    queries, whose build runs a whole stream, session drift). The
+    registry-wide compile, plan, schema and drift lints share it, so
+    Tier-1 builds each query once for all of them. Each build's
+    persisted intermediates are released once its plan is captured, so
+    no query's cached fragment rewrites a later query's plan. The drift
+    is ``perfbench.probes.drift`` between snapshots taken before the
+    build and after that release: (new temp views, conf keys changed,
+    new persisted RDDs)."""
     from movie_rankings_spark.caching import release_persisted
     from movie_rankings_spark.plans.all_queries import QUERIES
+    from perfbench.probes import drift, session_snapshot
 
     memo = {}
 
     def build(name: str):
         if name not in memo:
+            before = session_snapshot(spark)
             df = QUERIES[name](spark, sf_dir)
             plan = None
             if not name.startswith("stream_"):
                 plan = df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "simple"
                 )
-            memo[name] = (df.schema, plan)
+            schema = df.schema
             release_persisted()
+            memo[name] = (schema, plan, drift(before, session_snapshot(spark)))
         return memo[name]
 
     return build

@@ -94,6 +94,7 @@ def test_bucketed_cum_matches_across_bucket_counts(spark):
     # the bucket count must not change any answer — run the same KS
     # at 1 bucket (pure window) and many buckets (offsets dominate)
     from movie_rankings_spark.operators.disttests import _bucketed_cum2
+    from movie_rankings_spark.session import session_conf
 
     rng = np.random.default_rng(3)
     a = rng.integers(0, 1000, size=500)
@@ -101,12 +102,11 @@ def test_bucketed_cum_matches_across_bucket_counts(spark):
     df = _two_group_df(spark, a, b)
     outs = []
     for k in (1, 4, 64):
-        cum, n_a, n_b = _bucketed_cum2(
-            df, "v", F.col("a"), F.col("b"), buckets=k
-        )
-        rows = sorted(
-            (r["v"], r["cum_a"], r["cum_b"]) for r in cum.collect()
-        )
+        with session_conf(spark, {"spark.sql.shuffle.partitions": str(k)}):
+            cum, n_a, n_b = _bucketed_cum2(df, "v", F.col("a"), F.col("b"))
+            rows = sorted(
+                (r["v"], r["cum_a"], r["cum_b"]) for r in cum.collect()
+            )
         outs.append((n_a, n_b, rows))
     assert outs[0] == outs[1] == outs[2]
 

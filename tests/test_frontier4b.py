@@ -96,6 +96,29 @@ def test_kcore_sf001_contract_rounds_reach_fixed_point(spark, sf_dir):
     assert converged(edges, k=8, n_rounds=6)
 
 
+def test_kcore_copurchase_matches_oracle(spark, sf_dir, tmp_path):
+    """The registered query equals its unrolled DuckDB twin under the
+    oracle checker's memory limit: the twin's per-round CTEs must stay
+    materialized, or DuckDB inlines 2^rounds copies of the edge build
+    and runs out of memory."""
+    import duckdb
+
+    from movie_rankings_spark.catalog import TABLES, table_path
+    from movie_rankings_spark.plans.all_queries import ORACLES, QUERIES
+    from tools.check_oracle import DUCKDB_CONFIG, compare
+
+    con = duckdb.connect(
+        config={**DUCKDB_CONFIG, "temp_directory": str(tmp_path)}
+    )
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
+        )
+    want = con.execute(ORACLES["kcore_copurchase"]).df()
+    got = QUERIES["kcore_copurchase"](spark, sf_dir).toPandas()
+    assert compare(got, want) == []
+
+
 # --- Adamic–Adar -------------------------------------------------------------
 
 

@@ -81,7 +81,7 @@ def test_window_events_single_shuffle(built_query):
 def test_every_query_compiles(built_query, name):
     """Analysis (and, for batch queries, planning) succeeds without
     executing the result."""
-    schema, _ = built_query(name)
+    schema = built_query(name)[0]
     assert schema is not None
 
 
@@ -300,7 +300,7 @@ def test_python_stages_only_where_declared(built_query, name):
     """Catching accidental UDF creep: a Python node appearing in any
     query outside the plan lint's ``_PYTHON_RESIDENT`` is a performance
     regression, not a style issue."""
-    _, plan = built_query(name)
+    plan = built_query(name)[1]
     has_py = bool(_PY_NODE.search(plan))
     assert has_py == (name in _PYTHON_RESIDENT), name
 

@@ -17,7 +17,8 @@ the warehouse sink/ingest ROUND-TRIP queries execute full
 write(+streaming) jobs at plan-build time before returning the
 audit-readback plan (r9 ADVICE — the batch lint must not imply those
 builds are free). Every lint reads the schema from the session's one
-build of each query (the ``built_query`` fixture in conftest.py).
+build of each query (the ``built_query`` fixture in conftest.py), and
+the drift lint reads the session drift that build left.
 """
 
 from __future__ import annotations
@@ -55,6 +56,15 @@ def _nested_columns(schema) -> list[str]:
         for f in schema.fields
         if isinstance(f.dataType, (ArrayType, MapType, StructType))
     ]
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_build_leaves_session_as_found(name, built_query):
+    """A query leaves the shared session as it found it: no new temp
+    view, no changed conf key, no persisted RDD left after
+    ``release_persisted`` — so results and timings do not depend on
+    run order. The drift is (new views, changed conf keys, new RDDs)."""
+    assert built_query(name)[2] == (0, 0, 0)
 
 
 @pytest.mark.parametrize("name", _BATCH)

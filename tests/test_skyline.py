@@ -5,6 +5,13 @@ and duplicates), and bucket-count invariance."""
 from __future__ import annotations
 
 from movie_rankings_spark.operators.skyline import skyline_2d
+from movie_rankings_spark.session import session_conf
+
+
+def _ids(spark, df, buckets):
+    """Skyline ids with the session asking for ``buckets`` buckets."""
+    with session_conf(spark, {"spark.sql.shuffle.partitions": str(buckets)}):
+        return sorted((r["id"],) for r in skyline_2d(df, "x", "y").collect())
 
 
 def _naive(rows):
@@ -48,14 +55,9 @@ def test_matches_naive_semantics(spark):
 def test_bucket_count_invariance(spark):
     rows = _fixture(200)
     df = spark.createDataFrame(rows, "id long, x double, y int")
-    base = sorted(
-        (r["id"],) for r in skyline_2d(df, "x", "y", buckets=1).collect()
-    )
+    base = _ids(spark, df, 1)
     for b in (2, 7, 64):
-        got = sorted(
-            (r["id"],) for r in skyline_2d(df, "x", "y", buckets=b).collect()
-        )
-        assert got == base, b
+        assert _ids(spark, df, b) == base, b
 
 
 def test_single_point_and_monotone_chain(spark):
@@ -78,9 +80,7 @@ def test_null_rows_excluded_both_engines(spark):
 
     rows = [(0, 1.0, 10), (1, None, 99), (2, 5.0, None), (3, 2.0, 20)]
     df = spark.createDataFrame(rows, "id long, x double, y int")
-    got = sorted(
-        (r["id"],) for r in skyline_2d(df, "x", "y", buckets=2).collect()
-    )
+    got = _ids(spark, df, 2)
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE t (id BIGINT, x DOUBLE, y INT)"

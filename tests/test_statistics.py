@@ -160,7 +160,11 @@ def test_quantile_rank_map_matches_percent_rank(spark):
     rng = random.Random(3)
     vals = [float(rng.randrange(40)) for _ in range(500)]  # heavy ties
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    got = {r["value"]: (r["n_rows"], r["pct"]) for r in quantile_rank_map(df, "x", 8).collect()}
+    with session_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+        got = {
+            r["value"]: (r["n_rows"], r["pct"])
+            for r in quantile_rank_map(df, "x").collect()
+        }
     n = len(vals)
     s = sorted(vals)
     for v in set(vals):
@@ -315,7 +319,7 @@ def test_gini_single_partition_degenerate(spark):
 
 
 def test_quantile_rank_map_single_bucket(spark):
-    """Regression (r4): buckets=1 yields an empty bounds list — rows
+    """Regression (r4): one bucket yields an empty bounds list — rows
     must land in bucket 0 and keep their exact ranks, not vanish via
     the old [-inf] sentinel's join against an offsets table that only
     knows bucket 0."""
@@ -323,10 +327,8 @@ def test_quantile_rank_map_single_bucket(spark):
 
     vals = [5.0, 1.0, 3.0, 3.0, 9.0]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    got = {
-        r["value"]: r["pct"]
-        for r in quantile_rank_map(df, "x", buckets=1).collect()
-    }
+    with session_conf(spark, {"spark.sql.shuffle.partitions": "1"}):
+        got = {r["value"]: r["pct"] for r in quantile_rank_map(df, "x").collect()}
     assert got == {1.0: 0.0, 3.0: 0.25, 5.0: 0.75, 9.0: 1.0}
 
 
